@@ -123,7 +123,7 @@ object Bench {
       // each read cached partitions, so exactly `low` threads compute
       def probe(parts: Int): Double = {
         val (_, sec) = time(
-          Er.score(scoreBenchIn.coalesce(parts), cfg, parallelismFloor = false).count())
+          Er.score(scoreBenchIn.coalesce(parts), cfg).count())
         nScoreBench / sec
       }
       val legs = (1 to 3).map(_ => (probe(low), probe(cpus)))

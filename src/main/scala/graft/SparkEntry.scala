@@ -223,18 +223,6 @@ object SparkEntry {
        |  WHERE bl.id <> br.id_r AND abs(bl.len - br.len_r) < 64
        |)""".stripMargin
 
-  /** Parallelism FLOOR for CPU-bound scorer inputs (see Er.score): only
-    * repartition narrow inputs — an already-wide input must not be
-    * coalesced down (and content bytes shouldn't take a pointless
-    * shuffle). 2x cores, not 4x: over-partitioning is this VM's dominant
-    * bench pathology (graft.tools.PairScale). `.rdd.getNumPartitions`
-    * forces physical planning (not execution) — acceptable for a
-    * once-per-query guard. */
-  private def widenIfNarrow(spark: SparkSession, df: DataFrame): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism * 2
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Width guard for CPU-bound scorer inputs attached via
     * [[Er.withContents]] (round 6): in its broadcast branch the pair side
     * is already repartitioned to 2x parallelism, so the attached frame

@@ -15,16 +15,10 @@ final case class ErConfig(
     shingleK: Int = 5,       // char-shingle length for MinHash
     numHashes: Int = 63,     // MinHash signature length
     lshBands: Int = 21,      // bands (r = numHashes/lshBands rows per band)
-    maxBlockSize: Int = 16,  // retained config surface; since round 6 all
-                             // blocks <= saltedMaxBlockSize pair in one
-                             // task-local loop (see candidatePairs), so this
-                             // no longer selects a join path
     saltedMaxBlockSize: Int = 64, // pairing cap: blocks beyond it are dropped
                              // as boilerplate (pair work grows as
                              // sum(blockSize^2)); also bounds the round-6
                              // collect_list buffer
-    saltBuckets: Int = 4,    // retained config surface (round-1..5 salted
-                             // triangle join fan-out; unused since round 6)
     seed: Long = 42L,
     emitCigars: Boolean = false) {
   require(tau < band, s"tau ($tau) must be < band ($band)")
@@ -151,7 +145,7 @@ object Er {
     * last, once per pair side).
     *
     * Round 6 (guide §3.1/§8): when the projected (id, bytes) corpus side
-    * is estimated under [[contentBroadcastLimit]], both attach joins are
+    * is estimated under [[ContentBroadcastLimitBytes]], both attach joins are
     * explicit broadcast-hash joins — the pairs side is then never
     * shuffled by content at all (the old plan paid THREE payload
     * exchanges: corpus by id_a, the half-attached pairs + corpus again by
@@ -180,18 +174,19 @@ object Er {
       .select("id_a", "id_b", "bytes_a", "bytes_b")
   }
 
+  /** Size gate of [[withContents]]' broadcast branch: 256 MB, a small
+    * fraction of typical executor memory and far under Spark's 8 GB
+    * broadcast cap, so an optimizer estimate that is off by an order of
+    * magnitude still broadcasts safely. */
+  private val ContentBroadcastLimitBytes = BigInt(256L << 20)
+
   /** True when the optimizer's size estimate for `df` fits under
-    * `SPARK_GRAFT_CONTENT_BROADCAST_MB` (default 256 MB — well inside
-    * executor/driver budgets here and a small fraction of typical
-    * production executor memory; Spark's broadcast hard cap is 8 GB).
-    * Estimates come from plan statistics, so the decision adapts to the
-    * input scale instead of being a local-mode constant: a 100-TB corpus
-    * reports terabytes and keeps the shuffled join. */
-  private[graft] def fitsBroadcast(df: DataFrame): Boolean = {
-    val limitBytes = BigInt(sys.env.getOrElse("SPARK_GRAFT_CONTENT_BROADCAST_MB", "256").toLong
-      * (1L << 20))
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= limitBytes
-  }
+    * [[ContentBroadcastLimitBytes]]. Estimates come from plan statistics,
+    * so the decision adapts to the input scale instead of being a
+    * local-mode constant: a 100-TB corpus reports terabytes and keeps the
+    * shuffled join. */
+  private[graft] def fitsBroadcast(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= ContentBroadcastLimitBytes
 
   // ----------------------------------------------------------------- scoring
 
@@ -200,29 +195,18 @@ object Er {
     * partition (primitive arrays reused across pairs — no per-pair churn),
     * sequential banded WFA per pair. Emits per-pair lineage inputs
     * (cells expanded, partition id) alongside the score.
+    *
+    * Scores the partitions it is given — one task per input partition —
+    * and building the frame starts no Spark job. Width is set by the code
+    * that builds the rows: [[withContents]] widens the skinny pairs in its
+    * broadcast branch, [[assignIncremental]] repartitions its candidates.
     */
-  /** @param parallelismFloor disable ONLY for controlled-concurrency
-    *   probes (Bench's interleaved scaling legs pin concurrency via the
-    *   input's partition count — a compute-only stage over an
-    *   N-partition cached frame runs exactly N concurrent tasks); every
-    *   production caller keeps the floor. */
-  def score(pairsWithContents: DataFrame, cfg: ErConfig,
-            parallelismFloor: Boolean = true): DataFrame = {
+  def score(pairsWithContents: DataFrame, cfg: ErConfig): DataFrame = {
     val spark = pairsWithContents.sparkSession
     import spark.implicits._
     val band = cfg.band
     val emitCigars = cfg.emitCigars
-    // CPU-bound stage: AQE sizes partitions by bytes and will coalesce a
-    // small-byte but compute-heavy input below core count — keep a floor of
-    // 2x parallelism (no-op when the input is already wide, i.e. at scale;
-    // was 4x, which silently re-shuffled content inside callers that had
-    // already repartitioned to 2x cores)
-    val target = spark.sparkContext.defaultParallelism * 2
-    val input =
-      if (parallelismFloor && pairsWithContents.rdd.getNumPartitions < target)
-        pairsWithContents.repartition(target)
-      else pairsWithContents
-    input
+    pairsWithContents
       .select($"id_a".as[Long], $"id_b".as[Long],
         $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
       .mapPartitions { it =>
@@ -415,9 +399,12 @@ object Er {
     val cand = bt.join(elig, Seq("lang", "bucket"))
       .join(sn, Seq("lang", "bucket"))
       .where(abs(col("len") - col("len_s")) < 64)
+    // the candidate join arrives AQE-coalesced to one partition (few
+    // bytes, much WFA work): widen it so scoring runs on every core
     val scored = score(cand.select(col("id").as("id_a"), col("id_s").as("id_b"),
-      col("content").cast("binary").as("bytes_a"),
-      col("content_s").cast("binary").as("bytes_b")), cfg)
+        col("content").cast("binary").as("bytes_a"),
+        col("content_s").cast("binary").as("bytes_b"))
+      .repartition(cand.sparkSession.sparkContext.defaultParallelism * 2), cfg)
     val matches = scored
       .where(!col("saturated") && col("distance") <= cfg.tau)
       // sn has exactly one row per snapshot doc (single home bucket)

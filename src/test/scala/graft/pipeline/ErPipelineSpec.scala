@@ -2,14 +2,21 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.core.Levenshtein
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end ER pipeline tests: pairwise F1 >= 0.99 against exact
   * DP-oracle ground truth (BASELINE.json metric), connected-components
   * correctness, resume-from-checkpoint, and the sha256 invariant
   * (SURVEY.md §5.2 items 3, 4, 6). */
-class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
+class ErPipelineSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
 
   private val cfg = ErConfig()
   private val genCfg = Corpus.GenConfig(nGroups = 120, partitions = 8)
@@ -243,15 +250,74 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(got == expected, s"missing=${expected diff got} extra=${got diff expected}")
   }
 
-  test("score with parallelismFloor off returns the same scores on the same partitions") {
+  test("score keeps its input's partitions and results") {
     val pairs = Er.candidatePairs(Er.blocks(corpus, cfg), cfg)
-    val in = Er.withContents(pairs, corpus).repartition(2)
-    val floored = Er.score(in, cfg).drop("part_id", "cells")
-    val pinned = Er.score(in, cfg, parallelismFloor = false).drop("part_id", "cells")
-    // the bench's interleaved legs rely on: (a) identical results, (b) the
-    // pinned path not widening the 2-partition input
-    assert(Er.score(in, cfg, parallelismFloor = false).rdd.getNumPartitions == 2)
-    assert(pinned.exceptAll(floored).isEmpty && floored.exceptAll(pinned).isEmpty)
+    val wide = Er.withContents(pairs, corpus)
+    val narrow = wide.repartition(2)
+    // the bench's interleaved legs pin concurrency through the input's
+    // partition count: score must neither widen nor coalesce it
+    val scored = Er.score(narrow, cfg)
+    assert(scored.rdd.getNumPartitions == 2)
+    val a = scored.drop("part_id", "cells")
+    val b = Er.score(wide, cfg).drop("part_id", "cells")
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  test("building the scoring frames starts no Spark job") {
+    val pairs = Er.candidatePairs(Er.blocks(corpus, cfg), cfg)
+    val snap = corpus.select(col("id"), col("lang"), col("content"), col("id").as("entity"))
+    val batch = corpus.where(col("id") % 10 === 0).select("id", "lang", "content")
+    assert(jobsStartedBy(Er.score(Er.withContents(pairs, corpus), cfg)) == 0)
+    assert(jobsStartedBy(Er.assignIncremental(snap, batch, cfg)) == 0)
+  }
+
+  test("withContents broadcasts the corpus once and reuses it for side b") {
+    // a checkpointed (parquet) corpus, as ErRunner reads it: Spark does not
+    // match exchanges over two scans of one in-memory cache, so a cached
+    // corpus is broadcast per side whatever the attach plan looks like
+    val dir = java.nio.file.Files.createTempDirectory("er-attach").toString
+    corpus.write.mode("overwrite").parquet(dir)
+    val stored = spark.read.parquet(dir)
+    val attached = Er.withContents(Er.candidatePairs(Er.blocks(stored, cfg), cfg), stored)
+    attached.collect()
+    // the final AQE plan, read after the action: reuse is decided as
+    // stages materialize, so the initial plan still lists two exchanges
+    val plan = attached.queryExecution.executedPlan
+    val corpusSide = collect(plan) {
+      case e: BroadcastExchangeExec if e.output.exists(_.dataType == BinaryType) => e }
+    assert(corpusSide.size == 1, plan)
+    assert(collect(plan) { case e: ReusedExchangeExec => e }.size == 1, plan)
+  }
+
+  /** Spark jobs started while `body` runs on this thread, told apart by
+    * job group. A marker job flushes the listener bus, which delivers
+    * events in order. */
+  private def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val started = new AtomicInteger()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus did not flush")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    started.get
   }
 
   test("incremental scoring: anti-join resume matches a full scoring run") {
