@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   *                    enforces the same 2*len capacity but fails fast with
   *                    a clear error instead; 0/absent = unbounded (buffers
   *                    are sized dynamically).
-  *   -b <batch>       batch size -> partition size (pairs per task)
+  *   -b <batch>       accepted for command-line parity and ignored. The
+  *                    reference sizes each batch to fit GPU memory
+  *                    (src/wavefront.cu:211-330); here each task streams
+  *                    its pairs through one reused WfaWorkspace, and task
+  *                    width comes from the read's own pair_id shuffle.
   *   -t <threads>     worker threads -> local[t] cores
   *   -p               print CIGARs ("idx: cigar", reference
   *                    src/wavefront.cu:293-300)
@@ -31,8 +35,8 @@ import org.apache.spark.sql.functions._
 object AlignerCli {
 
   final case class Config(file: String = "", num: Long = 0, seqLen: Int = 0,
-                          batch: Int = 4096, threads: Int = 0,
-                          print: Boolean = false, band: Int = 64)
+                          threads: Int = 0, print: Boolean = false,
+                          band: Int = 64)
 
   /** Accepts the reference's short AND long forms (its generic parser
     * matches either, /root/reference/utils/arg_handler.c:88-138; long
@@ -45,7 +49,7 @@ object AlignerCli {
         case "-f" | "--file" => c = c.copy(file = args(i + 1)); i += 2
         case "-n" | "--num-alignments" => c = c.copy(num = args(i + 1).toLong); i += 2
         case "-l" | "--seq-len" => c = c.copy(seqLen = args(i + 1).toInt); i += 2
-        case "-b" | "--batch-size" => c = c.copy(batch = args(i + 1).toInt); i += 2
+        case "-b" | "--batch-size" => args(i + 1).toInt; i += 2 // checked, then ignored
         case "-t" | "--cpu-threads" => c = c.copy(threads = args(i + 1).toInt); i += 2
         case "-p" | "--print-cigars" => c = c.copy(print = true); i += 1
         case "-d" | "--max-distance" => c = c.copy(band = args(i + 1).toInt); i += 2
@@ -53,8 +57,9 @@ object AlignerCli {
       }
     }
     require(c.file.nonEmpty,
-      "usage: AlignerCli -f|--file <file> [-n|--num-alignments num] [-b|--batch-size batch] " +
-        "[-t|--cpu-threads threads] [-d|--max-distance band] [-p|--print-cigars]")
+      "usage: AlignerCli -f|--file <file> [-n|--num-alignments num] [-l|--seq-len len] " +
+        "[-t|--cpu-threads threads] [-d|--max-distance band] [-p|--print-cigars] " +
+        "(-b|--batch-size is accepted and ignored: tasks take the read's partitions)")
     c
   }
 
@@ -76,10 +81,7 @@ object AlignerCli {
           "overflow its buffer here — rerun with a larger -l or drop it")
     }
     val band = c.band
-    val n = math.max(pairs.count(), 1L)
-    val parts = math.max((n / math.max(c.batch, 1)).toInt, 1)
     pairs
-      .repartition(parts, col("pair_id"))
       .select($"pair_id".as[Long],
         $"pattern".cast("binary").as[Array[Byte]],
         $"text".cast("binary").as[Array[Byte]])

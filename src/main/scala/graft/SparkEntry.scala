@@ -223,23 +223,6 @@ object SparkEntry {
        |  WHERE bl.id <> br.id_r AND abs(bl.len - br.len_r) < 64
        |)""".stripMargin
 
-  /** Width guard for CPU-bound scorer inputs attached via
-    * [[Er.withContents]] (round 6): in its broadcast branch the pair side
-    * is already repartitioned to 2x parallelism, so the attached frame
-    * arrives wide; in the shuffled FALLBACK branch the attach output is
-    * AQE-coalesced by bytes (~64 MB targets), which can strangle a
-    * compute-heavy mapPartitions down to a few tasks — repartition it
-    * then. The branch is decided exactly like withContents decides it
-    * (same [[Er.fitsBroadcast]] estimate on the same projection), keeping
-    * this a plan-time decision with no `.rdd` probe (which would eagerly
-    * execute the AQE subtree once before the real action). */
-  private def scorerWidth(spark: SparkSession, attached: DataFrame,
-                          corpus: DataFrame): DataFrame =
-    if (Er.fitsBroadcast(
-        corpus.select(col("id"), col("content").cast("binary").as("bytes"))))
-      attached
-    else attached.repartition(spark.sparkContext.defaultParallelism * 2)
-
   /** WFA band derived from the data (max content length + 1 > any possible
     * distance, so WFA never saturates and equals unit-cost Levenshtein),
     * with an ASCII assertion — DuckDB's levenshtein() is char-level while
@@ -291,11 +274,7 @@ object SparkEntry {
       val corpus = erInput(spark, dir)
       val pairs = erCandidates(spark, dir)
       erBand(spark, dir) // retained guards: non-empty corpus, pure ASCII (oracle exactness)
-      // withContents widens the skinny pair frame itself in its broadcast
-      // branch; scorerWidth re-widens only the shuffled fallback (whose
-      // AQE byte-based coalescing would otherwise serialize the scorer)
-      val withBytes = scorerWidth(spark, Er.withContents(pairs, corpus), corpus)
-      withBytes.select($"id_a".as[Long], $"id_b".as[Long],
+      Er.withContents(pairs, corpus).select($"id_a".as[Long], $"id_b".as[Long],
           $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
         .mapPartitions { it =>
           val ws = new graft.core.LevenshteinWorkspace()
@@ -325,10 +304,7 @@ object SparkEntry {
     // broadcast with a shuffled fallback (an earlier draft broadcast the
     // content-bearing half-attached pair frame unconditionally, which has
     // no fallback once the matched set outgrows the 8 GB broadcast cap).
-    // withContents widens the pair side itself in its broadcast branch;
-    // the scorerWidth guard below covers the shuffled fallback.
-    val withBytes = scorerWidth(spark, Er.withContents(matched, corpus), corpus)
-    withBytes.select($"id_a".as[Long], $"id_b".as[Long],
+    Er.withContents(matched, corpus).select($"id_a".as[Long], $"id_b".as[Long],
         $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
       .mapPartitions { it =>
         val ws = new WfaWorkspace(64, withCigar = true)

@@ -19,8 +19,7 @@ final case class ErConfig(
                              // as boilerplate (pair work grows as
                              // sum(blockSize^2)); also bounds the round-6
                              // collect_list buffer
-    seed: Long = 42L,
-    emitCigars: Boolean = false) {
+    seed: Long = 42L) {
   require(tau < band, s"tau ($tau) must be < band ($band)")
   require(numHashes % lshBands == 0, "numHashes must be divisible by lshBands")
 }
@@ -185,16 +184,16 @@ object Er {
     * so the decision adapts to the input scale instead of being a
     * local-mode constant: a 100-TB corpus reports terabytes and keeps the
     * shuffled join. */
-  private[graft] def fitsBroadcast(df: DataFrame): Boolean =
+  private def fitsBroadcast(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes <= ContentBroadcastLimitBytes
 
   // ----------------------------------------------------------------- scoring
 
   /** The core operator (reference kernel WF_edit_distance,
-    * /root/reference/src/kernels.cu:182-310): one WfaWorkspace per
-    * partition (primitive arrays reused across pairs — no per-pair churn),
-    * sequential banded WFA per pair. Emits per-pair lineage inputs
-    * (cells expanded, partition id) alongside the score.
+    * /root/reference/src/kernels.cu:182-310): one distance-only
+    * WfaWorkspace per partition (primitive arrays reused across pairs — no
+    * per-pair churn), sequential banded WFA per pair. Emits per-pair
+    * lineage inputs (cells expanded, partition id) alongside the score.
     *
     * Scores the partitions it is given — one task per input partition —
     * and building the frame starts no Spark job. Width is set by the code
@@ -205,33 +204,18 @@ object Er {
     val spark = pairsWithContents.sparkSession
     import spark.implicits._
     val band = cfg.band
-    val emitCigars = cfg.emitCigars
     pairsWithContents
       .select($"id_a".as[Long], $"id_b".as[Long],
         $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
       .mapPartitions { it =>
-        val ws = new WfaWorkspace(band, withCigar = emitCigars)
+        val ws = new WfaWorkspace(band, withCigar = false)
         val part = TaskContext.getPartitionId()
         it.map { case (ida, idb, a, b) =>
           val r = Wfa.align(a, b, ws)
-          (ida, idb, r.distance, r.saturated,
-            if (emitCigars) r.cigar else null, r.cells, part)
+          (ida, idb, r.distance, r.saturated, r.cells, part)
         }
       }
-      .toDF("id_a", "id_b", "distance", "saturated", "cigar", "cells", "part_id")
-  }
-
-  /** Pair-level resume: score only candidate pairs absent from an existing
-    * (partial) scored checkpoint, then union — the anti-join resume of
-    * SURVEY.md §2.2 ("semi/anti joins for resume-from-checkpoint"). The
-    * anti-join runs on skinny (id_a, id_b) keys before content is attached. */
-  def scoreIncremental(pairs: DataFrame, corpus: DataFrame,
-                       alreadyScored: DataFrame, cfg: ErConfig): DataFrame = {
-    val todo = pairs.join(alreadyScored.select("id_a", "id_b"),
-      Seq("id_a", "id_b"), "left_anti")
-    score(withContents(todo, corpus), cfg)
-      .unionByName(alreadyScored.select(
-        "id_a", "id_b", "distance", "saturated", "cigar", "cells", "part_id"))
+      .toDF("id_a", "id_b", "distance", "saturated", "cells", "part_id")
   }
 
   /** Per-partition lineage for the scoring stage (BASELINE.json north_star:
@@ -312,14 +296,12 @@ object Er {
       .select(col("id_a").as("u"), col("id_b").as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(eager = false) // materialized by isEmpty below
-    if (e.isEmpty) {
-      return e.select(col("u").as("id"), col("v").as("entity"))
-    }
+      .localCheckpoint(eager = false) // materialized by signature below
+    var sig = signature(e)
+    if (sig._1 == 0L) return e.select(col("u").as("id"), col("v").as("entity"))
 
     var converged = false
     var iters = 0
-    var sig = signature(e)
     while (!converged && iters < maxIters) {
       val next = cut(smallStar(largeStar(e)))
       val nextSig = signature(next)

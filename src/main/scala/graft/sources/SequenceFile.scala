@@ -10,16 +10,23 @@ import org.apache.spark.sql.functions._
   * malformed marker (sequence_reader.cu:156-168); we do the same per line.
   *
   * Pairing is positional, so ingestion assigns global line numbers with
-  * zipWithIndex (order of spark.read.text is deterministic: file order +
-  * in-file offset) and pivots 2i/2i+1 into one row — the distributed
-  * re-expression of the reference's sequential two-line reader.
+  * zipWithIndex (split order + in-split offset) and pivots 2i/2i+1 into
+  * one row — the distributed re-expression of the reference's sequential
+  * two-line reader. Spark orders the splits of several files by size,
+  * not by name, so the input must be exactly one file (the reference
+  * reads one file too); a directory holding several fails fast.
   */
 object SequenceFile {
 
   /** Read `>`/`<` line pairs into (pair_id, pattern, text). */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val lines = spark.read.textFile(path).rdd.zipWithIndex()
+    val text = spark.read.textFile(path)
+    val files = text.inputFiles.length
+    require(files == 1,
+      s"sequence input $path holds $files files; pair ids follow line " +
+        "order, which Spark keeps only within one file — concatenate them first")
+    val lines = text.rdd.zipWithIndex()
     val tagged = lines.map { case (line, idx) =>
       val marker = if (idx % 2 == 0) '>' else '<'
       if (line.isEmpty || line.charAt(0) != marker)

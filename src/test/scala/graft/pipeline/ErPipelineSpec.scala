@@ -320,20 +320,6 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     started.get
   }
 
-  test("incremental scoring: anti-join resume matches a full scoring run") {
-    val blocks = Er.blocks(corpus, cfg)
-    val pairs = Er.candidatePairs(blocks, cfg).cache()
-    val full = Er.score(Er.withContents(pairs, corpus), cfg)
-      .drop("part_id", "cells") // partition assignment legitimately differs
-    // simulate a killed run that scored only pairs with even id_a
-    val partial = Er.score(
-      Er.withContents(pairs.where(col("id_a") % 2 === 0), corpus), cfg)
-    val resumed = Er.scoreIncremental(pairs, corpus, partial, cfg)
-      .drop("part_id", "cells")
-    assert(resumed.count() == full.count())
-    assert(resumed.exceptAll(full).isEmpty && full.exceptAll(resumed).isEmpty)
-  }
-
   test("resume: completed stages are not recomputed; output identical") {
     val dir = java.nio.file.Files.createTempDirectory("er-resume").toString
     val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())

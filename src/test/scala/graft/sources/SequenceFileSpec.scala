@@ -2,13 +2,16 @@ package graft.sources
 
 import graft.{AlignerCli, SparkTestBase}
 import graft.core.{Levenshtein, Packing}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import scala.util.Random
 
 /** Reference-format I/O (S1), 2-bit packing parity (S3/S4), and the CLI
   * surface (S14/E1). */
-class SequenceFileSpec extends AnyFunSuite with SparkTestBase {
+class SequenceFileSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
 
   private def writeSeqFile(pairs: Seq[(String, String)]): String = {
     val f = Files.createTempFile("seqs", ".txt")
@@ -33,6 +36,18 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(e.getMessage.contains("malformed") ||
       Option(e.getCause).exists(_.getMessage.contains("malformed")))
+  }
+
+  test("read refuses a directory of several files (split order is not file order)") {
+    val dir = Files.createTempDirectory("seqparts")
+    // Spark orders splits by size: the larger part-00001 would come first
+    // and take pair ids 0-2
+    Files.writeString(dir.resolve("part-00000"), ">A\n<A\n>C\n<C\n")
+    Files.writeString(dir.resolve("part-00001"), ">GGGG\n<GGGG\n>TTTT\n<TTTT\n>ACGT\n<ACGT\n")
+    val e = intercept[IllegalArgumentException] {
+      SequenceFile.read(spark, dir.toString).collect()
+    }
+    assert(e.getMessage.contains("2 files"), e.getMessage)
   }
 
   test("write/read roundtrip") {
@@ -79,7 +94,9 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase {
     }
     val path = writeSeqFile(pairs)
     val cfg = AlignerCli.parseArgs(Array("-f", path, "-b", "16", "-d", "64", "-p"))
-    assert(cfg.file == path && cfg.batch == 16 && cfg.print)
+    assert(cfg.file == path && cfg.print)
+    // -b is accepted for parity and changes nothing
+    assert(cfg == AlignerCli.parseArgs(Array("-f", path, "-d", "64", "-p")))
     val out = AlignerCli.run(spark, cfg).orderBy("pair_id").collect()
     assert(out.length == 50)
     out.foreach { r =>
@@ -100,7 +117,17 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase {
       "--file", path, "--num-alignments", "10", "--seq-len", "200",
       "--batch-size", "16", "--cpu-threads", "4", "--max-distance", "32",
       "--print-cigars"))
-    assert(long == AlignerCli.Config(path, 10, 200, 16, 4, print = true, band = 32))
+    assert(long == AlignerCli.Config(path, 10, 200, 4, print = true, band = 32))
+  }
+
+  test("AlignerCli.run shuffles the pairs once") {
+    val path = writeSeqFile((1 to 40).map(i => ("ACGT" * i, "ACGA" * i)))
+    val out = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path, "-b", "4")))
+    assert(out.collect().length == 40)
+    // the final AQE plan, read after the action: the read's pair_id pivot
+    // is the only exchange; the scorer takes its partitions as they come
+    val plan = out.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
   }
 
   test("-l/--seq-len enforces the reference's 2*len slot capacity, fail-fast") {
