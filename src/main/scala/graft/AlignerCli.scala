@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *                    reference sizes each batch to fit GPU memory
   *                    (src/wavefront.cu:211-330); here each task streams
   *                    its pairs through one reused WfaWorkspace, and task
-  *                    width comes from the read's own pair_id shuffle.
+  *                    width comes from the sequence file's splits.
   *   -t <threads>     worker threads -> local[t] cores
   *   -p               print CIGARs ("idx: cigar", reference
   *                    src/wavefront.cu:293-300)

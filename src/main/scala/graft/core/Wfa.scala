@@ -206,10 +206,6 @@ object Wfa {
     WfaResult(band, saturated = true, null, cells)
   }
 
-  /** Distance-only fast path (no backtrace bookkeeping). */
-  def distance(pattern: Array[Byte], text: Array[Byte], ws: WfaWorkspace): Int =
-    align(pattern, pattern.length, text, text.length, ws).distance
-
   private def renderDistanceZero(tlen: Int): String =
     if (tlen == 0) "" else s"${tlen}M"
 

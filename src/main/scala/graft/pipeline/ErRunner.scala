@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * Checkpoint layout (round-2 verdict #1): corpus and blocks are
   * Hive-partitioned by `lang` — blocking keys never cross languages, so a
   * resumed (or lang-scoped) run prunes to the languages it touches;
-  * pairs are range-partitioned into [[PairBuckets]] hash buckets so an
-  * incremental scorer can work bucket-at-a-time with bounded reads. */
+  * pairs are Hive-partitioned into [[PairBuckets]] buckets by a hash of
+  * `id_a`, so a read of one bucket touches only its directory. */
 object ErRunner {
 
   val Stages: Seq[String] =

@@ -5,7 +5,7 @@ import graft.core.{Levenshtein, Packing}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.util.Random
 
 /** Reference-format I/O (S1), 2-bit packing parity (S3/S4), and the CLI
@@ -28,14 +28,46 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     assert(rows(2).getString(1) == "" && rows(2).getString(2) == "A")
   }
 
-  test("read fails fast on malformed markers (reference parity)") {
+  private def assertMalformed(content: String): Unit = {
     val f = Files.createTempFile("bad", ".txt")
-    Files.writeString(f, ">ACGT\n>OOPS\n")
+    Files.writeString(f, content)
     val e = intercept[Exception] {
       SequenceFile.read(spark, f.toString).collect()
     }
     assert(e.getMessage.contains("malformed") ||
-      Option(e.getCause).exists(_.getMessage.contains("malformed")))
+      Option(e.getCause).exists(_.getMessage.contains("malformed")), e)
+  }
+
+  test("read fails fast on malformed markers (reference parity)") {
+    assertMalformed(">ACGT\n>OOPS\n")
+  }
+
+  test("read rejects a trailing '>' line that has no '<' partner") {
+    assertMalformed(">A\n<C\n>G\n")
+  }
+
+  test("read rejects bare-\\r line endings") {
+    assertMalformed(">A\r<C\r>G\r<T\r")
+  }
+
+  test("read returns the same pairs at every split size") {
+    val pairs = Seq(("ACGT", "ACTT"), ("", "GG"), ("T", ""), ("GATTACA", "GATACA"), ("C", "C"))
+    val lf = writeSeqFile(pairs)
+    val crlf = Files.createTempFile("seqs-crlf", ".txt")
+    Files.writeString(crlf, Files.readString(Paths.get(lf)).replace("\n", "\r\n"))
+    val expected = pairs.zipWithIndex.map { case ((p, t), i) => (i.toLong, p, t) }
+    try {
+      for (path <- Seq(lf, crlf.toString)) {
+        val len = Files.size(Paths.get(path))
+        // every split edge position is hit, including between '\n' and '>'
+        for (split <- 1L to len) {
+          spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+          val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+          assert(rows == expected, s"$path at $split-byte splits")
+        }
+      }
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("read refuses a directory of several files (split order is not file order)") {
@@ -120,14 +152,14 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     assert(long == AlignerCli.Config(path, 10, 200, 4, print = true, band = 32))
   }
 
-  test("AlignerCli.run shuffles the pairs once") {
+  test("AlignerCli.run reads and aligns without a shuffle") {
     val path = writeSeqFile((1 to 40).map(i => ("ACGT" * i, "ACGA" * i)))
     val out = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path, "-b", "4")))
     assert(out.collect().length == 40)
-    // the final AQE plan, read after the action: the read's pair_id pivot
-    // is the only exchange; the scorer takes its partitions as they come
+    // the final AQE plan, read after the action: each task scores the
+    // pairs of one file split, so no exchange is planned
     val plan = out.queryExecution.executedPlan
-    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
   }
 
   test("-l/--seq-len enforces the reference's 2*len slot capacity, fail-fast") {
