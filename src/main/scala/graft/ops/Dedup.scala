@@ -337,8 +337,9 @@ object Dedup {
 
   /** Materialize the dedup: one survivor (the minimum id) per connected
     * component of the near-dup pair graph, singletons kept. Composes the
-    * ER clustering (large-star/small-star CC — O(log n) shuffle-bounded
-    * rounds) with an anti-join, so the result is the deduped corpus a
+    * ER clustering (one edge shuffle and a per-task union-find, with
+    * large-star/small-star rounds only for components split across
+    * tasks) with an anti-join, so the result is the deduped corpus a
     * training pipeline actually feeds downstream. `docs` needs an `id`
     * column; `pairs` is any (id_a, id_b) near-dup pair set (MinHash,
     * SimHash, embedding, or WFA-scored edges). */

@@ -5,6 +5,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** ER pipeline configuration (the Spark re-expression of the reference's
   * CLI surface, /root/reference/src/aligner.cu:75-139: band generalizes the
@@ -233,15 +234,26 @@ object Er {
     scored.where(!col("saturated") && col("distance") <= lit(cfg.tau))
       .select("id_a", "id_b")
 
-  /** Iterative large-star/small-star connected components over DataFrames
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * O(log n) rounds, shuffle-bounded; the scale-safe alternative to label
-    * propagation whose round count is the component diameter). Driver loop
-    * with a per-round lineage cut (reliable checkpoint on a cluster,
-    * localCheckpoint on a single box — SURVEY.md §4).
+  /** Connected components of the match graph. Returns (id, entity) for
+    * every node of `edgeDf` (self-loops aside); entity is the component's
+    * minimum id. Ids are integral and come back as longs.
     *
-    * Returns (id, entity) for every node present in `edgeDf`; entity is the
-    * component's minimum id.
+    * One pass on ER-shaped graphs (many small components): the edges are
+    * shuffled once by `id_a` — AQE sizes that exchange, so a small edge
+    * set lands in one task and a large one stays spread — and each task
+    * contracts its edges with a union-find ([[contract]]) into a star
+    * forest of the same connectivity, every edge pointing from a child to
+    * a smaller parent. One aggregation gives every node its parents
+    * ([[parents]]). When no node has two distinct parents and no parent is
+    * itself a child ([[isStarForest]]), the stars are exactly the
+    * components and their roots are the component minima, so each node's
+    * entity is read off that same table, with no further shuffle. Only
+    * components whose edges were split across tasks leave the forest
+    * unfinished; large-star/small-star rounds finish them (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond" — O(log n) rounds,
+    * each shuffle-bounded; the scale-safe alternative to label
+    * propagation, whose round count is the component diameter), each
+    * followed by the same aggregation and test.
     *
     * @param maxIters round cap — a backstop, not a tuning knob: large-star/
     *   small-star converges in O(log n) rounds, so 50 covers ~2^50 nodes.
@@ -250,20 +262,18 @@ object Er {
     *   returning silently (round-4 verdict). */
   def connectedComponents(edgeDf: DataFrame, maxIters: Int = 50): DataFrame = {
     val spark = edgeDf.sparkSession
-    // per-round lineage cut: reliable checkpoint when the session has a
-    // checkpoint dir (the cluster path — survives executor loss and keeps
-    // the plan O(1) regardless of round count); localCheckpoint otherwise
-    // (single-box path: RDD blocks on local storage). Checkpoint files of
-    // superseded rounds accumulate until GC'd — long-lived cluster
-    // sessions should set spark.cleaner.referenceTracking.cleanCheckpoints
-    // =true so finished rounds' files are removed (see SCALING.md)
-    // round 6: the localCheckpoint is LAZY — the per-round signature()
-    // aggregation right after it is the action that materializes the
-    // checkpointed blocks, so each round runs ONE job instead of two
-    // (eager-checkpoint job + signature job; ~6 rounds saved 6 job
-    // round-trips in the bench's cluster stage). The reliable-checkpoint
-    // branch stays eager: a lazy reliable checkpoint would recompute the
-    // round's plan a second time when writing the checkpoint files.
+    import spark.implicits._
+    // lineage cut after the contraction, each round and each parents
+    // table: reliable checkpoint when the session has a checkpoint dir
+    // (the cluster path — survives executor loss and keeps the plan O(1)
+    // regardless of round count); localCheckpoint otherwise (single-box
+    // path: RDD blocks on local storage). Checkpoint files of superseded
+    // rounds accumulate until GC'd — long-lived cluster sessions should
+    // set spark.cleaner.referenceTracking.cleanCheckpoints=true (see
+    // SCALING.md). The localCheckpoint is lazy: the isStarForest test
+    // after it is the action that materializes it, so the cut costs no
+    // job of its own. The reliable checkpoint stays eager: a lazy one
+    // would compute its plan a second time when writing the files.
     def cut(df: DataFrame): DataFrame =
       if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
       else df.localCheckpoint(eager = false)
@@ -292,40 +302,70 @@ object Er {
       moved.union(self).where(col("u") =!= col("v")).distinct()
     }
 
-    var e = edgeDf
-      .select(col("id_a").as("u"), col("id_b").as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false) // materialized by signature below
-    var sig = signature(e)
-    if (sig._1 == 0L) return e.select(col("u").as("id"), col("v").as("entity"))
-
-    var converged = false
+    // the filter drops self-loops (and null ids) before the one shuffle
+    var e = cut(edgeDf
+      .where(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b"))
+      .repartition(col("id_a"))
+      .as[(Long, Long)]
+      .mapPartitions(contract)
+      .toDF("u", "v"))
+    var nodes = cut(parents(e))
+    var done = isStarForest(nodes)
     var iters = 0
-    while (!converged && iters < maxIters) {
-      val next = cut(smallStar(largeStar(e)))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      sig = nextSig
-      e = next
+    while (!done && iters < maxIters) {
+      e = cut(smallStar(largeStar(e)))
+      nodes = cut(parents(e))
+      done = isStarForest(nodes)
       iters += 1
     }
-    require(converged,
+    require(done,
       s"connected components did not converge within $maxIters rounds — " +
         "star contraction incomplete, entities would be wrong")
-    // converged state is a forest of stars rooted at component minima
-    val members = e.select(col("u").as("id"), col("v").as("entity"))
-    val roots = e.select(col("v").as("id"), col("v").as("entity")).distinct()
-    members.union(roots).distinct()
+    // in a star forest a node's one parent is its component's root
+    nodes.select(col("n").as("id"), coalesce(col("lo"), col("n")).as("entity"))
   }
 
-  private def signature(e: DataFrame): (Long, Long) = {
-    // order-independent, overflow-free (ANSI-safe) edge-set fingerprint
-    val row = e.agg(
-      count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h")).head()
-    (row.getLong(0), row.getLong(1))
+  /** One task's share of the edges as a star forest with the same
+    * connectivity: union-find (union by smaller root, path compression)
+    * over a primitive-keyed map holding at most two nodes per edge, then
+    * (node, root) for every node that is not its component's root. Roots
+    * are minima, so every emitted parent is below its child. */
+  private def contract(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      var c = x
+      while (r != c) { c = r; r = parent(c) }
+      c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val nodes = new mutable.ArrayBuilder.ofLong
+    parent.foreachKey(nodes += _)
+    nodes.result().iterator.map(n => (n, find(n))).filter { case (n, r) => n != r }
   }
+
+  /** One row per node of the (u -> v) edges: its smallest and largest
+    * parent (null for a root) and whether it is itself a parent. One
+    * aggregation over (n = u, its parent v) and (n = v, marked as a
+    * parent). */
+  private def parents(e: DataFrame): DataFrame =
+    e.select(col("u").as("n"), col("v").as("p"))
+      .union(e.select(col("v").as("n"), lit(null).cast("long").as("p")))
+      .groupBy("n")
+      .agg(min("p").as("lo"), max("p").as("hi"),
+        (count(lit(1)) > count(col("p"))).as("is_parent"))
+
+  /** True when the edges behind [[parents]] form a forest of stars: no
+    * node has two distinct parents and no parent is itself a child. */
+  private def isStarForest(nodes: DataFrame): Boolean =
+    nodes.where(col("lo") =!= col("hi") || (col("lo").isNotNull && col("is_parent")))
+      .isEmpty
 
   /** Final entity table: every corpus id mapped to its entity (singletons
     * map to themselves). */
@@ -415,7 +455,7 @@ object Er {
 
   // ------------------------------------------------------------ full pipeline
 
-  /** End-to-end, unchckpointed (testing / small inputs). Returns
+  /** End-to-end, uncheckpointed (testing / small inputs). Returns
     * (id, entity). */
   def run(corpus: DataFrame, cfg: ErConfig): DataFrame = {
     val b = blocks(corpus, cfg)

@@ -170,42 +170,66 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
       val n = 150
       val edges = (1 to 220).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      // union-find oracle
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      val expected = componentMinima(edges)
+      for (coalesce <- Seq(true, false)) withCoalescing(coalesce) {
+        val got = Er.connectedComponents(edges.toDF("id_a", "id_b")).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"trial $trial, coalescing $coalesce")
       }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(v => v -> {
-          // component min = find with full path compression to the min root
-          var r = v.toInt; while (parent(r) != r) r = parent(r); r.toLong
-        }).toMap
-      val got = Er.connectedComponents(edges.toDF("id_a", "id_b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"trial $trial")
     }
   }
 
   test("connected components: 200-node path converges (log-round algorithm)") {
     import spark.implicits._
     val e = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Er.connectedComponents(e).collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(comps.length == 200)
-    assert(comps.forall(_._2 == 0L))
+    for (coalesce <- Seq(true, false)) withCoalescing(coalesce) {
+      val comps = Er.connectedComponents(e).collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(comps.length == 200)
+      assert(comps.forall(_._2 == 0L))
+    }
   }
 
   test("connected components: fails loud when the round cap exhausts before convergence") {
     import spark.implicits._
     // a 200-node path needs several large/small-star rounds; cap 1 cannot
     // converge, and an incomplete contraction must raise, not return wrong
-    // entities silently (round-4 verdict)
+    // entities silently (round-4 verdict). Coalescing off scatters the
+    // path over every shuffle partition: coalesced, its 199 edges land in
+    // one task, whose union-find finishes them without a round
     val e = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ex = intercept[IllegalArgumentException] {
-      Er.connectedComponents(e, maxIters = 1).collect()
+    withCoalescing(on = false) {
+      val ex = intercept[IllegalArgumentException] {
+        Er.connectedComponents(e, maxIters = 1).collect()
+      }
+      assert(ex.getMessage.contains("did not converge"))
     }
-    assert(ex.getMessage.contains("did not converge"))
+  }
+
+  test("connectedComponents finishes an ER-shaped graph without star rounds") {
+    import spark.implicits._
+    // 3,000 duplicate groups of 2-6 documents (a random spanning tree plus
+    // extra intra-group pairs) and one 96-node chain, over shuffled ids
+    val rnd = new scala.util.Random(5)
+    val ids = rnd.shuffle((0L until 20000L).toVector).iterator
+    val groups = Seq.fill(3000)(Vector.fill(2 + rnd.nextInt(5))(ids.next())) :+
+      Vector.fill(96)(ids.next())
+    val edges = groups.flatMap { g =>
+      val tree = (1 until g.length).map(i => (g(rnd.nextInt(i)), g(i)))
+      val extra = Seq.fill(g.length / 2)((g(rnd.nextInt(g.length)), g(rnd.nextInt(g.length))))
+        .filter { case (a, b) => a != b }
+      (tree ++ extra).map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+    }
+    val expected = componentMinima(edges)
+    val e = rnd.shuffle(edges).toDF("id_a", "id_b").repartition(8)
+    def comps() = Er.connectedComponents(e).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (coalesce <- Seq(true, false)) withCoalescing(coalesce) {
+      assert(comps() == expected, s"coalescing $coalesce")
+    }
+    // coalesced, the edges reach one task: the edge shuffle, the
+    // contraction and the parents aggregation that is both the star-forest
+    // test and the result, with no large/small-star round
+    val jobs = withCoalescing(on = true)(jobsStartedBy(comps()))
+    assert(jobs <= 8, s"$jobs jobs")
   }
 
   test("connected components: empty edges") {
@@ -287,6 +311,30 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
       case e: BroadcastExchangeExec if e.output.exists(_.dataType == BinaryType) => e }
     assert(corpusSide.size == 1, plan)
     assert(collect(plan) { case e: ReusedExchangeExec => e }.size == 1, plan)
+  }
+
+  /** Component minimum of every node of an undirected edge list: the
+    * driver-side union-find oracle for [[Er.connectedComponents]]. */
+  private def componentMinima(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  /** Runs `body` with AQE partition coalescing set `on`, unset after. Off,
+    * a small edge set scatters over every shuffle partition, so its
+    * components split across tasks and need large/small-star rounds. */
+  private def withCoalescing[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, on)
+    try body finally spark.conf.unset(key)
   }
 
   /** Spark jobs started while `body` runs on this thread, told apart by
