@@ -1,8 +1,8 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 /** Checkpointed stage runner: every pipeline stage writes a partitioned
@@ -14,6 +14,9 @@ import scala.collection.mutable
   * per-partition lineage table for the scoring stage are written alongside
   * (the Spark re-expression of the reference's wall-time + per-batch debug
   * metrics, /root/reference/src/aligner.cu:198-233, utils/logger.h:54-59).
+  * Checks and deletes go through the Hadoop `FileSystem` of `baseDir`, so
+  * any Hadoop URI (`file://`, `hdfs://`, `s3a://`) works as a work
+  * directory.
   */
 final class StageRunner(spark: SparkSession, baseDir: String) {
 
@@ -23,11 +26,15 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
 
   private def path(name: String) = s"$baseDir/$name"
 
-  private def isComplete(name: String): Boolean =
-    Files.exists(Paths.get(path(name), "_SUCCESS"))
+  private val fs = new Path(baseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** True when the stage's checkpoint carries its `_SUCCESS` marker. */
+  def isComplete(name: String): Boolean = fs.exists(new Path(path(name), "_SUCCESS"))
 
   /** Run (or resume) a stage. `compute` is only invoked when the stage's
-    * checkpoint is absent or incomplete.
+    * checkpoint is absent or incomplete, or when an earlier stage of this
+    * runner was computed in this run: a later checkpoint may have been
+    * built from that stage's old output, so it must not resume.
     *
     * `partitionCols` Hive-partitions the checkpoint table (e.g. by lang),
     * so a resumed run — or any downstream reader with a partition-column
@@ -38,7 +45,7 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
     * never a second count-the-table scan. */
   def stage(name: String, partitionCols: Seq[String] = Nil)
            (compute: => DataFrame): DataFrame = {
-    if (!isComplete(name)) {
+    if (computed.nonEmpty || !isComplete(name)) {
       computed += name
       val t0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation(s"graft_lineage_$name")
@@ -69,11 +76,6 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
     spark.read.parquet(s"$baseDir/_lineage/$name")
 
   /** Drop a stage's checkpoint (test helper to simulate a partial run). */
-  def invalidate(names: String*): Unit = names.foreach { n =>
-    val p = Paths.get(path(n))
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
-  }
+  def invalidate(names: String*): Unit =
+    names.foreach(n => fs.delete(new Path(path(n)), true))
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Shared bucket-capped self-join used by every LSH family operator
@@ -55,7 +56,7 @@ object Buckets {
       .groupBy(kc: _*)
       .agg(collect_list(col("id")).as("ids"))
       .select($"ids".as[Seq[Long]])
-      .flatMap(ids => localPairs[Long](ids, identity, (_, _) => true))
+      .flatMap(ids => localPairs[Long](ids, maxGroup, identity, (_, _) => true))
       .toDF("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
   }
@@ -65,10 +66,12 @@ object Buckets {
     * (min, max). The single source of the cap-bounded triangle loop —
     * [[cappedSelfJoinPairs]] and Er.candidatePairs both route through it,
     * so the bounded-buffer/orientation invariants live in one place.
-    * Callers guarantee |ms| <= cap via the eligibility pre-filter. */
-  private[graft] def localPairs[T](ms: Seq[T], id: T => Long,
+    * A bucket of more than `cap` members is a caller bug (its pair
+    * buffer would grow quadratically past the cap) and fails loud. */
+  private[graft] def localPairs[T](ms: Seq[T], cap: Int, id: T => Long,
                                    keep: (T, T) => Boolean): Seq[(Long, Long)] = {
     val n = ms.length
+    require(n <= cap, s"bucket of $n members exceeds the pairing cap $cap")
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](n * (n - 1) / 2)
     var i = 0
     while (i < n) {
@@ -84,5 +87,32 @@ object Buckets {
       i += 1
     }
     out.toSeq
+  }
+
+  /** One block as [[CappedMembers]] aggregates it: its member count `n`,
+    * and its members' ids and lengths while `n` is at most the cap (empty
+    * past it). */
+  final case class CappedBlock(n: Long, ids: Array[Long], lens: Array[Int])
+
+  /** Block aggregation with a buffer bounded by construction: counts every
+    * (id, len) row of a block, but keeps the members only while the count
+    * is at most `cap`, so a mega-block's buffer is a bare count however
+    * many rows it has. A partial count never exceeds the block's total, so
+    * a block of at most `cap` rows keeps every member through any order of
+    * updates and merges. Use through `functions.udaf` so it runs as one
+    * map-side-combinable aggregation. */
+  final class CappedMembers(cap: Int)
+      extends Aggregator[(Long, Int), CappedBlock, CappedBlock] {
+    private def countOnly(n: Long) = CappedBlock(n, Array.emptyLongArray, Array.emptyIntArray)
+    def zero: CappedBlock = countOnly(0L)
+    def reduce(b: CappedBlock, m: (Long, Int)): CappedBlock =
+      if (b.n < cap) CappedBlock(b.n + 1, b.ids :+ m._1, b.lens :+ m._2)
+      else countOnly(b.n + 1)
+    def merge(x: CappedBlock, y: CappedBlock): CappedBlock =
+      if (x.n + y.n <= cap) CappedBlock(x.n + y.n, x.ids ++ y.ids, x.lens ++ y.lens)
+      else countOnly(x.n + y.n)
+    def finish(b: CappedBlock): CappedBlock = b
+    def bufferEncoder: Encoder[CappedBlock] = Encoders.product[CappedBlock]
+    def outputEncoder: Encoder[CappedBlock] = Encoders.product[CappedBlock]
   }
 }

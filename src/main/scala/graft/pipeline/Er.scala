@@ -1,9 +1,9 @@
 package graft.pipeline
 
 import graft.core.{Hashing, Wfa, WfaWorkspace}
+import graft.ops.Buckets
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -18,8 +18,8 @@ final case class ErConfig(
     lshBands: Int = 21,      // bands (r = numHashes/lshBands rows per band)
     saltedMaxBlockSize: Int = 64, // pairing cap: blocks beyond it are dropped
                              // as boilerplate (pair work grows as
-                             // sum(blockSize^2)); also bounds the round-6
-                             // collect_list buffer
+                             // sum(blockSize^2)); also bounds the
+                             // per-block member buffer
     seed: Long = 42L) {
   require(tau < band, s"tau ($tau) must be < band ($band)")
   require(numHashes % lshBands == 0, "numHashes must be divisible by lshBands")
@@ -68,77 +68,71 @@ object Er {
     * distance >= band, see Wfa.align) kills pairs before the pair-dedup
     * shuffle.
     *
-    * Round 6 restructure (guide §2.4 "remove shuffles outright"): the
-    * round-1..5 plan was a two-path self-join — a direct self-join for
-    * small blocks plus a salted TRIANGLE join for mid-size ones — which
-    * cost ~7 exchanges (sizes, sized-join, two self-join sides, two
-    * exploded triangle sides, dedup) and as many codegen'd stages; the
-    * bench pays that whole chain as a COLD one-shot, so per-stage fixed
-    * costs (Janino compile behind its KeyLock, shuffle-file setup, steal
-    * exposure) dominated the measured time (BenchExtra: the join chain
-    * was ~25 s one-shot vs ~4 s warm at sf0.1/local[32]). Now pair
-    * generation is ONE map-side-combinable sizing aggregation, one
-    * eligibility join (the skinny eligible-key side broadcasts when it
-    * fits), one collect_list groupBy that lands every eligible block in
-    * one task, and a task-local pair loop — 3 exchanges total, none of
-    * them wider than (keys, id, len).
-    *
-    * The salted triangle join existed to split one hot block's quadratic
-    * JOIN cell across tasks; with the cap at saltedMaxBlockSize (64) a
-    * whole block in one task is at most 64 members = 2016 local pair
-    * emissions — three orders of magnitude below a task's work quantum —
-    * so the task-skew argument for salting evaporates once the
-    * eligibility cap runs BEFORE the grouping (collect_list state is
-    * bounded by the cap; mega-blocks never reach it). Output is
-    * value-identical to the old two-path plan (same pair set, same
-    * orientation; pinned by ErPipelineSpec's F1/invariant suite). */
-  def candidatePairs(blocks: DataFrame, cfg: ErConfig): DataFrame = {
-    val spark = blocks.sparkSession
+    * Two exchanges, none wider than (keys, id, len): one map-side-combinable
+    * aggregation per block ([[blockMembers]]), whose buffer holds at most
+    * saltedMaxBlockSize members, so a mega-block never buffers more than
+    * its count; then a task-local pair loop over every block of 2..cap
+    * members and the pair dedup. A one-shot run's cost tracks its stage
+    * count (per-stage codegen and shuffle setup; CLAUDE.md lesson 4),
+    * which is why sizing, the cap and the member lists are one
+    * aggregation rather than a sizing aggregation, an eligibility join and
+    * a grouping. `blocks` is read once. Output is pinned by
+    * ErPipelineSpec's F1/invariant suite. */
+  def candidatePairs(blocks: DataFrame, cfg: ErConfig): DataFrame =
+    blockPairs(blockMembers(blocks, cfg), cfg)
+
+  /** One row per block: its keys (lang, band, bhash), its member count
+    * `n`, and its members' `ids` and `lens` when n <= saltedMaxBlockSize
+    * (empty past it; see [[graft.ops.Buckets.CappedMembers]]). The one
+    * aggregation behind both the pairs and the blocking-policy lineage. */
+  private[graft] def blockMembers(blocks: DataFrame, cfg: ErConfig): DataFrame = {
+    val members = udaf(new Buckets.CappedMembers(cfg.saltedMaxBlockSize),
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt))
+    blocks.groupBy("lang", "band", "bhash")
+      .agg(members(col("id"), col("len")).as("b"))
+      .select("lang", "band", "bhash", "b.*")
+  }
+
+  /** Pairs of the [[blockMembers]] rows: the task-local pair loop over
+    * every block of 2..cap members (shared cap-bounded triangle loop, see
+    * Buckets.localPairs) with the |len diff| < band pre-filter applied
+    * in-loop, then the pair dedup. */
+  private[graft] def blockPairs(members: DataFrame, cfg: ErConfig): DataFrame = {
+    val spark = members.sparkSession
     import spark.implicits._
-    val keys = Seq("lang", "band", "bhash")
+    val cap = cfg.saltedMaxBlockSize
     val band = cfg.band
-    // Block sizing via groupBy+join, NOT count().over(Window): the window
-    // shipped every row of a hot key to one task with no partial
-    // aggregation (68% of the round-1 bench). The eligibility list is one
-    // skinny row per multi-member block at-or-under the cap (singleton
-    // blocks — the vast majority — produce no pairs and die here; blocks
-    // OVER the cap are dropped before any of their rows can reach the
-    // collect_list, which is what keeps its buffer bounded). blocks is
-    // cached because the plan traverses it twice (sizes + probe); the
-    // cache is session-lifetime (LRU-evictable; repeated callers should
-    // pass an already-persisted/checkpointed frame — ErRunner does).
-    val cached = blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val elig = cached.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") >= 2 && col("bsz") <= cfg.saltedMaxBlockSize)
-      .select(keys.map(col): _*)
-    cached.join(elig, keys)
-      .groupBy(keys.map(col): _*)
-      .agg(collect_list(struct(col("id"), col("len"))).as("ms"))
-      .select($"ms".as[Seq[(Long, Int)]])
-      // task-local pair loop over one block (<= cap members; shared
-      // cap-bounded triangle loop — see Buckets.localPairs) with the
-      // |len diff| < band pre-filter applied in-loop
-      .flatMap(ms => graft.ops.Buckets.localPairs[(Long, Int)](ms, _._1,
-        (a, b) => math.abs(a._2 - b._2) < band))
+    members.where(col("n") >= 2 && col("n") <= cap)
+      .select($"ids".as[Array[Long]], $"lens".as[Array[Int]])
+      .flatMap { case (ids, lens) =>
+        Buckets.localPairs[Int](ids.indices, cap, ids(_),
+          (i, j) => math.abs(lens(i) - lens(j)) < band)
+      }
       .toDF("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
   }
 
+  /** The mega-block drop (> saltedMaxBlockSize, the shared-boilerplate
+    * recall policy) as aggregate expressions over [[blockMembers]] rows:
+    * (n_blocks_dropped, n_rows_dropped, max_block_size). The policy is a
+    * constant, so its cost must be observable at scale (round-1 verdict);
+    * ErRunner observes these on the pairs write, [[blockingLineage]]
+    * aggregates them on their own. */
+  private[graft] def blockingPolicy(cfg: ErConfig): Seq[Column] = {
+    val over = col("n") > cfg.saltedMaxBlockSize
+    Seq(
+      coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L)).as("n_blocks_dropped"),
+      coalesce(sum(when(over, col("n")).otherwise(0L)), lit(0L)).as("n_rows_dropped"),
+      coalesce(max("n"), lit(0L)).as("max_block_size"))
+  }
+
   /** Blocking-policy lineage: how many blocks (and member rows) the
-    * mega-block drop (> saltedMaxBlockSize, the shared-boilerplate recall
-    * policy) discards — the policy is a constant, so its cost must be
-    * observable at scale (round-1 verdict). One row: (n_blocks_dropped,
+    * mega-block drop discards. One row: (n_blocks_dropped,
     * n_rows_dropped, max_block_size). */
-  def blockingLineage(blocks: DataFrame, cfg: ErConfig): DataFrame =
-    // one source of truth for group sizing: ops.Buckets (same groupBy
-    // shape the cap policy itself uses)
-    graft.ops.Buckets.sizes(blocks, Seq("lang", "band", "bhash")).agg(
-      coalesce(sum(when(col("gsz") > cfg.saltedMaxBlockSize, 1L).otherwise(0L)), lit(0L))
-        .as("n_blocks_dropped"),
-      coalesce(sum(when(col("gsz") > cfg.saltedMaxBlockSize, col("gsz")).otherwise(0L)), lit(0L))
-        .as("n_rows_dropped"),
-      coalesce(max("gsz"), lit(0L)).as("max_block_size"))
+  def blockingLineage(blocks: DataFrame, cfg: ErConfig): DataFrame = {
+    val policy = blockingPolicy(cfg)
+    blockMembers(blocks, cfg).agg(policy.head, policy.tail: _*)
+  }
 
   /** Attach both contents (two equi-joins against the corpus — ids-only
     * pairs stay skinny through the dedup shuffle; content is joined in

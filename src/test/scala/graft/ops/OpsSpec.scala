@@ -196,6 +196,16 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     assert(none.getLong(0) == 0L && none.getLong(1) == 0L)
   }
 
+  test("localPairs refuses a bucket over its cap") {
+    val cap = 4
+    val pairs = Buckets.localPairs[Long]((0L until cap).toVector, cap, identity, (_, _) => true)
+    assert(pairs.length == cap * (cap - 1) / 2)
+    val ex = intercept[IllegalArgumentException] {
+      Buckets.localPairs[Long]((0L to cap).toVector, cap, identity, (_, _) => true)
+    }
+    assert(ex.getMessage.contains("exceeds the pairing cap"))
+  }
+
   test("dedupSurvivors keeps the min id per near-dup component, singletons intact") {
     val ids = spark.range(1, 13).select(col("id"))
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")

@@ -6,7 +6,8 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
@@ -374,12 +375,12 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     assert(r1.computed == ErRunner.Stages)
     val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
 
-    // kill after 'scored': drop downstream checkpoints, re-run
+    // kill after 'scored': drop the downstream checkpoint, re-run
     val r2 = new graft.io.StageRunner(spark, dir)
-    r2.invalidate("edges", "entities")
+    r2.invalidate("entities")
     val r3 = ErRunner.run(spark, dir, cfg)(
       sys.error("corpus must not be recomputed on resume"))
-    assert(r3.computed == Seq("edges", "entities"))
+    assert(r3.computed == Seq("entities"))
     val ent2 = spark.read.parquet(s"$dir/entities").collect().toSet
     assert(ent1 == ent2)
 
@@ -440,23 +441,17 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
   test("checkpoint tables are partition-pruned: a lang-scoped read touches only its directory") {
     val dir = java.nio.file.Files.createTempDirectory("er-prune").toString
     ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    for (stage <- Seq("corpus", "blocks")) {
-      // candidatePairs persists the blocks frame; drop any cache entry for
-      // this path so input_file_name() reflects a real file scan, not an
-      // InMemoryRelation (which returns "")
-      spark.read.parquet(s"$dir/$stage").unpersist()
-      val all = spark.read.parquet(s"$dir/$stage")
-      val langs = all.select("lang").distinct().collect().map(_.getString(0))
-      assert(langs.length >= 2, s"$stage: need multiple langs to demonstrate pruning")
-      val one = langs.head
-      val scanned = all.where(col("lang") === one)
-        .select(input_file_name()).distinct().collect().map(_.getString(0))
-      assert(scanned.nonEmpty && scanned.forall(_.contains(s"lang=$one")),
-        s"$stage: lang-filtered read must stay inside its partition dir: $scanned")
-      val totalFiles = all.select(input_file_name()).distinct().count()
-      assert(scanned.length < totalFiles,
-        s"$stage: pruned read ($one) must touch fewer files than the full table")
-    }
+    val all = spark.read.parquet(s"$dir/corpus")
+    val langs = all.select("lang").distinct().collect().map(_.getString(0))
+    assert(langs.length >= 2, "need multiple langs to demonstrate pruning")
+    val one = langs.head
+    val scanned = all.where(col("lang") === one)
+      .select(input_file_name()).distinct().collect().map(_.getString(0))
+    assert(scanned.nonEmpty && scanned.forall(_.contains(s"lang=$one")),
+      s"lang-filtered read must stay inside its partition dir: $scanned")
+    val totalFiles = all.select(input_file_name()).distinct().count()
+    assert(scanned.length < totalFiles,
+      s"pruned read ($one) must touch fewer files than the full table")
     // pairs: hash-bucketed — a single-bucket read prunes the same way
     val pairs = spark.read.parquet(s"$dir/pairs")
     assert(pairs.columns.contains("pair_bucket"))
@@ -480,5 +475,94 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     val pairs = Er.candidatePairs(blocks, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((100L, 101L)))
+  }
+
+  test("blockMembers equals a per-block oracle: every count, members up to the cap") {
+    import spark.implicits._
+    val cap = 8
+    val capped = cfg.copy(saltedMaxBlockSize = cap)
+    val rnd = new scala.util.Random(11)
+    // sizes at the cap's edges plus random ones, rows dealt round-robin
+    // over 8 partitions so every block is merged from partial buffers
+    val sizes = Seq(1, 2, cap - 1, cap, cap + 1, 2 * cap) ++ Seq.fill(60)(1 + rnd.nextInt(3 * cap))
+    val rows = sizes.zipWithIndex.flatMap { case (n, b) =>
+      Seq.fill(n)((rnd.nextInt(400).toLong, 100 + rnd.nextInt(80),
+        if (b % 2 == 0) "x" else "y", b % 3, b.toLong))
+    }
+    val blocks = rnd.shuffle(rows).toDF("id", "len", "lang", "band", "bhash").repartition(8)
+    val got = Er.blockMembers(blocks, capped).collect().map { r =>
+      (r.getString(0), r.getInt(1), r.getLong(2)) ->
+        (r.getLong(3), r.getSeq[Long](4).zip(r.getSeq[Int](5)).sorted)
+    }.toMap
+    val expected = rows.groupBy(r => (r._3, r._4, r._5)).map { case (k, ms) =>
+      k -> (ms.length.toLong,
+        if (ms.length <= cap) ms.map(m => (m._1, m._2)).sorted else Seq.empty)
+    }
+    assert(got == expected)
+    assert(got.values.exists(_._1 == 2 * cap) && got.values.exists(_._1 == cap))
+  }
+
+  test("candidatePairs shuffles twice and caches nothing") {
+    import spark.implicits._
+    val rows = (0 until 40).map(i => (i.toLong, 500 + i % 30, "scala", i % 2, (i % 5).toLong)) ++
+      (200 until 300).map(i => (i.toLong, 500, "scala", 0, 9L))
+    val pairs = Er.candidatePairs(rows.toDF("id", "len", "lang", "band", "bhash"), cfg)
+    pairs.collect()
+    val plan = pairs.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 2, plan)
+    assert(collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty, plan)
+    assert(pairs.queryExecution.optimizedPlan.collect { case m: InMemoryRelation => m }.isEmpty)
+  }
+
+  test("ErRunner.run on the spec corpus starts at most 25 jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("er-jobs").toString
+    val source = Corpus.generate(spark, genCfg).toDF()
+    val jobs = jobsStartedBy(ErRunner.run(spark, dir, cfg)(source))
+    info(s"$jobs jobs")
+    assert(jobs <= 25, s"$jobs jobs")
+  }
+
+  test("ErRunner.run writes the blocking_policy row blockingLineage computes") {
+    // a cap of 2 drops every block of three or more members
+    val capped = cfg.copy(saltedMaxBlockSize = 2)
+    val dir = java.nio.file.Files.createTempDirectory("er-policy").toString
+    val r = ErRunner.run(spark, dir, capped)(Corpus.generate(spark, genCfg).toDF())
+    val written = r.readLineage("blocking_policy")
+    val expected = Er.blockingLineage(
+      Er.blocks(spark.read.parquet(s"$dir/corpus"), capped), capped)
+    assert(written.schema.fieldNames.toSeq == expected.schema.fieldNames.toSeq)
+    assert(written.collect().toSeq == expected.collect().toSeq)
+    assert(written.head().getLong(0) > 0L)
+  }
+
+  test("resume: a recomputed stage recomputes every later stage") {
+    val dir = java.nio.file.Files.createTempDirectory("er-recompute").toString
+    ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+    val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
+    new graft.io.StageRunner(spark, dir).invalidate("pairs")
+    val r = ErRunner.run(spark, dir, cfg)(
+      sys.error("corpus must not be recomputed on resume"))
+    assert(r.computed == Seq("pairs", "scored", "entities"))
+    assert(spark.read.parquet(s"$dir/entities").collect().toSet == ent1)
+  }
+
+  test("a file:// URI work directory runs and fully resumes") {
+    val dir = java.nio.file.Files.createTempDirectory("er-uri").toUri.toString
+    assert(dir.startsWith("file:/"))
+    val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+    assert(r1.computed == ErRunner.Stages)
+    val r2 = ErRunner.run(spark, dir, cfg)(
+      sys.error("corpus must not be recomputed on resume"))
+    assert(r2.computed.isEmpty)
+    val batch = spark.read.parquet(s"$dir/corpus").where(col("id") % 10 === 0)
+      .select((col("id") + 10000000L).as("id"), col("lang"), col("content"))
+    val i1 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(batch)
+    assert(i1.computed == Seq("batch", "assigned", "entities_merged"))
+    val i2 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(
+      sys.error("batch must not be recomputed on resume"))
+    assert(i2.computed.isEmpty)
+    val runner = new graft.io.StageRunner(spark, dir)
+    runner.invalidate("entities")
+    assert(!runner.isComplete("entities") && runner.isComplete("scored"))
   }
 }
