@@ -99,7 +99,7 @@ object AsOf {
     * (microsecond ordering — exact for timestamp inputs); pick
     * `bucketWidthUs` so a hot key's per-bucket density is task-sized.
     * Default stays [[asofJoin]]: at benign skew one shuffle beats three
-    * small ones (measured, graft.tools.JoinScale — quote the asymmetry).
+    * small ones (measured in SCALING.md's as-of rows — quote the asymmetry).
     * Note the composition reads each input twice (summaries/markers +
     * tagged rows — four pruned scans vs asofJoin's two); for expensive
     * upstream inputs, persist before calling. */

@@ -4,17 +4,22 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-/** Shared bucket-capped self-join used by every LSH family operator
-  * (MinHash, SimHash, hyperplane-LSH). Scale discipline (round-1 verdict):
-  *  - group sizes via `groupBy(...).count()` — map-side combinable; never
-  *    a `count().over(Window)`, which ships every row of a hot key to a
-  *    single task with no partial aggregation;
-  *  - groups larger than `maxGroup` are dropped outright (the shared-
-  *    boilerplate pathology: join work grows as sum(groupSize^2));
-  *  - singleton groups are dropped before the join (they produce no pairs
-  *    and are the vast majority of buckets);
-  *  - only skinny (keys, id) rows ride the self-join shuffle — payloads
-  *    (signatures, vectors, content) are re-joined after pair dedup.
+/** The block cap, in one place: the one capped grouping and the one pair
+  * loop behind every candidate-pair generator — the LSH family operators
+  * (MinHash, SimHash, hyperplane-LSH, SemDeDup cells) through
+  * [[cappedSelfJoinPairs]], ER blocking through Er.candidatePairs.
+  * Scale discipline (round-1 verdict):
+  *  - one map-side-combinable aggregation per group ([[cappedGroups]]):
+  *    its buffer is the group's count, plus its members only while the
+  *    count is at most the cap — never a `count().over(Window)`, which
+  *    ships every row of a hot key to a single task with no partial
+  *    aggregation;
+  *  - groups larger than the cap are dropped outright (the shared-
+  *    boilerplate pathology: pair work grows as sum(groupSize^2)), and a
+  *    dropped group costs its count, not its members;
+  *  - only skinny (keys, id, len) rows ride the aggregation shuffle —
+  *    payloads (signatures, vectors, content) are re-joined after pair
+  *    dedup.
   */
 object Buckets {
 
@@ -30,44 +35,53 @@ object Buckets {
         coalesce(sum("gsz"), lit(0L)).as("n_rows_dropped"))
 
   /** Distinct (id_a < id_b) pairs co-bucketed under `keys`, skipping groups
-    * with more than `maxGroup` members. `rows` must have an `id` column;
-    * expect `rows` to be cheap to recompute or cached (it is traversed for
-    * sizing and for the grouping pass).
+    * with more than `maxGroup` members. `rows` must have an `id` column
+    * (any integral type); it is read once.
     *
-    * Round 6 (guide §2.4): pair generation is a collect_list groupBy plus
-    * a task-local i<j loop instead of the old a/b self-join — two fewer
-    * exchanges and stages per LSH operator, with identical output (same
-    * pair set, same orientation). The collect_list buffer is bounded by
-    * `maxGroup` because the eligibility join runs BEFORE the grouping —
-    * over-cap (boilerplate) buckets never reach it; per-task pair
-    * emission is at most maxGroup*(maxGroup-1)/2 (~2k at the default
-    * caps), far under a task's work quantum, so the task-skew argument
-    * for join-cell splitting does not apply under a cap. */
-  def cappedSelfJoinPairs(rows: DataFrame, keys: Seq[String], maxGroup: Int): DataFrame = {
-    val spark = rows.sparkSession
+    * The LSH operators' form of the shared path: [[groupPairs]] over
+    * [[cappedGroups]] with every length 0 and no length rule — two
+    * exchanges (the per-group aggregation and the pair dedup), no join. */
+  def cappedSelfJoinPairs(rows: DataFrame, keys: Seq[String], maxGroup: Int): DataFrame =
+    groupPairs(cappedGroups(rows.withColumn("len", lit(0)), keys, maxGroup),
+      maxGroup, (_, _) => true)
+
+  /** One row per group of `rows` under `keys`: the keys, the member count
+    * `n`, and the members' `ids` and `lens` while `n` is at most `cap`
+    * (empty past it; see [[CappedMembers]]). One map-side-combinable
+    * aggregation over (id, len); `rows` needs `id` and `len` columns. */
+  def cappedGroups(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val members = udaf(new CappedMembers(cap),
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt))
+    rows.groupBy(keys.map(col): _*)
+      .agg(members(col("id").cast("long"), col("len")).as("g"))
+      .select(keys.map(col) :+ col("g.*"): _*)
+  }
+
+  /** Distinct (id_a < id_b) pairs of the [[cappedGroups]] rows: the
+    * task-local pair loop ([[localPairs]]) over every group of 2..cap
+    * members, keeping a pair when `keep` holds for its two lengths, then
+    * the pair dedup (a pair co-grouped under several keys is emitted once
+    * per group). */
+  def groupPairs(groups: DataFrame, cap: Int, keep: (Int, Int) => Boolean): DataFrame = {
+    val spark = groups.sparkSession
     import spark.implicits._
-    val kc = keys.map(col)
-    val eligibleKeys = sizes(rows, keys)
-      .where(col("gsz") >= 2 && col("gsz") <= maxGroup)
-      .select(kc: _*)
-    // eligibleKeys is tiny relative to rows (distinct multi-member buckets
-    // only) — AQE turns this into a broadcast join when it fits
-    rows.join(eligibleKeys, keys)
-      .groupBy(kc: _*)
-      .agg(collect_list(col("id")).as("ids"))
-      .select($"ids".as[Seq[Long]])
-      .flatMap(ids => localPairs[Long](ids, maxGroup, identity, (_, _) => true))
+    groups.where(col("n") >= 2 && col("n") <= cap)
+      .select($"ids".as[Array[Long]], $"lens".as[Array[Int]])
+      .flatMap { case (ids, lens) =>
+        localPairs[Int](ids.indices, cap, ids(_), (i, j) => keep(lens(i), lens(j)))
+      }
       .toDF("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Task-local normalized pair emission over ONE capped bucket's member
+  /** Task-local normalized pair emission over ONE capped group's member
     * list: every i<j pair with distinct ids passing `keep`, oriented
-    * (min, max). The single source of the cap-bounded triangle loop —
-    * [[cappedSelfJoinPairs]] and Er.candidatePairs both route through it,
-    * so the bounded-buffer/orientation invariants live in one place.
-    * A bucket of more than `cap` members is a caller bug (its pair
-    * buffer would grow quadratically past the cap) and fails loud. */
+    * (min, max). The one cap-bounded triangle loop, run by [[groupPairs]];
+    * per task it emits at most cap*(cap-1)/2 pairs per group (~2k at the
+    * default caps), far under a task's work quantum, so join-cell
+    * splitting buys nothing under a cap. A group of more than `cap`
+    * members is a caller bug (its pair buffer would grow quadratically
+    * past the cap) and fails loud. */
   private[graft] def localPairs[T](ms: Seq[T], cap: Int, id: T => Long,
                                    keep: (T, T) => Boolean): Seq[(Long, Long)] = {
     val n = ms.length
@@ -89,18 +103,18 @@ object Buckets {
     out.toSeq
   }
 
-  /** One block as [[CappedMembers]] aggregates it: its member count `n`,
-    * and its members' ids and lengths while `n` is at most the cap (empty
-    * past it). */
+  /** One group (an ER block, an LSH bucket) as [[CappedMembers]]
+    * aggregates it: its member count `n`, and its members' ids and
+    * lengths while `n` is at most the cap (empty past it). */
   final case class CappedBlock(n: Long, ids: Array[Long], lens: Array[Int])
 
-  /** Block aggregation with a buffer bounded by construction: counts every
-    * (id, len) row of a block, but keeps the members only while the count
-    * is at most `cap`, so a mega-block's buffer is a bare count however
-    * many rows it has. A partial count never exceeds the block's total, so
-    * a block of at most `cap` rows keeps every member through any order of
-    * updates and merges. Use through `functions.udaf` so it runs as one
-    * map-side-combinable aggregation. */
+  /** Group aggregation with a buffer bounded by construction: counts every
+    * (id, len) row of a group, but keeps the members only while the count
+    * is at most `cap`, so a mega-group's buffer is a bare count however
+    * many rows it has. A partial count never exceeds the group's total, so
+    * a group of at most `cap` rows keeps every member through any order of
+    * updates and merges. Runs through `functions.udaf` in [[cappedGroups]]
+    * as one map-side-combinable aggregation. */
   final class CappedMembers(cap: Int)
       extends Aggregator[(Long, Int), CappedBlock, CappedBlock] {
     private def countOnly(n: Long) = CappedBlock(n, Array.emptyLongArray, Array.emptyIntArray)

@@ -42,8 +42,9 @@ object KMeans {
     * [[graft.expr.L2SqInt]] (KMeansSpec pins them equal), exactly like
     * [[Similarity.cosineHof]]. The native expression replaces this in the
     * assignment hot loop: the fold pays per-row lambda dispatch + element
-    * boxing x k centroids x corpus rows (the shape CosineProbe measured
-    * 10.5x slower than codegen for cosine; round-3 verdict #2). */
+    * boxing x k centroids x corpus rows (the shape measured 10.5x slower
+    * than codegen for cosine; round-3 verdict #2, recorded in BASELINE.md
+    * "Native l2sq_int kernel"). */
   private[ops] def dist2Hof(a: org.apache.spark.sql.Column,
                             b: org.apache.spark.sql.Column) =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)

@@ -16,7 +16,7 @@ object Similarity {
     * null on null elements or length mismatch). Since round 3 this is
     * the native codegen'd [[graft.expr.CosineSim]] expression — the HOF
     * fold it replaces paid per-row lambda dispatch and element boxing
-    * (measured 1.1M vs 6.4M rows/s at dim 64, tools.CosineProbe) with
+    * (measured 1.1M vs 6.4M rows/s at dim 64; see BASELINE.md) with
     * bit-identical IEEE results (same sequential accumulation). Requires
     * [[graft.expr.GraftExtensions]] on the session, like the sampling
     * gate. [[cosineHof]] remains as the pure-built-in parity oracle. */
@@ -132,9 +132,11 @@ object Similarity {
     * then the exact cosine filter runs on deduped pairs only.
     *
     * Scale shape (round-1 verdict): skinny (tbl, bucket, id) rows ride the
-    * self-join — embeddings are re-joined after pair dedup; buckets above
-    * `maxBucket` members are dropped with map-side-combinable sizing
-    * ([[Buckets]]), so one degenerate bucket cannot go quadratic. Bucket
+    * capped grouping — embeddings are re-joined after pair dedup; buckets
+    * above `maxBucket` members keep only their count in the map-side-
+    * combinable aggregation and never reach the pair loop
+    * ([[Buckets.cappedSelfJoinPairs]]), so one degenerate bucket cannot
+    * go quadratic. Bucket
     * bits come from [[graft.core.Hashing.hyperplaneBucket]] (splitmix64
     * components, sequential-fold dots) so the DuckDB oracle reproduces
     * bucket assignment bit-for-bit. */

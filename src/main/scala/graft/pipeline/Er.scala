@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.core.{Hashing, Wfa, WfaWorkspace}
 import graft.ops.Buckets
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -76,40 +76,25 @@ object Er {
     * count (per-stage codegen and shuffle setup; CLAUDE.md lesson 4),
     * which is why sizing, the cap and the member lists are one
     * aggregation rather than a sizing aggregation, an eligibility join and
-    * a grouping. `blocks` is read once. Output is pinned by
+    * a grouping. Both are the LSH operators' own, from
+    * [[graft.ops.Buckets]]. `blocks` is read once. Output is pinned by
     * ErPipelineSpec's F1/invariant suite. */
   def candidatePairs(blocks: DataFrame, cfg: ErConfig): DataFrame =
     blockPairs(blockMembers(blocks, cfg), cfg)
 
   /** One row per block: its keys (lang, band, bhash), its member count
     * `n`, and its members' `ids` and `lens` when n <= saltedMaxBlockSize
-    * (empty past it; see [[graft.ops.Buckets.CappedMembers]]). The one
-    * aggregation behind both the pairs and the blocking-policy lineage. */
-  private[graft] def blockMembers(blocks: DataFrame, cfg: ErConfig): DataFrame = {
-    val members = udaf(new Buckets.CappedMembers(cfg.saltedMaxBlockSize),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt))
-    blocks.groupBy("lang", "band", "bhash")
-      .agg(members(col("id"), col("len")).as("b"))
-      .select("lang", "band", "bhash", "b.*")
-  }
+    * (empty past it) — [[graft.ops.Buckets.cappedGroups]] under ER's
+    * keys. The one aggregation behind both the pairs and the
+    * blocking-policy lineage. */
+  private[graft] def blockMembers(blocks: DataFrame, cfg: ErConfig): DataFrame =
+    Buckets.cappedGroups(blocks, Seq("lang", "band", "bhash"), cfg.saltedMaxBlockSize)
 
-  /** Pairs of the [[blockMembers]] rows: the task-local pair loop over
-    * every block of 2..cap members (shared cap-bounded triangle loop, see
-    * Buckets.localPairs) with the |len diff| < band pre-filter applied
-    * in-loop, then the pair dedup. */
+  /** Pairs of the [[blockMembers]] rows ([[graft.ops.Buckets.groupPairs]])
+    * with the |len diff| < band pre-filter applied in the pair loop. */
   private[graft] def blockPairs(members: DataFrame, cfg: ErConfig): DataFrame = {
-    val spark = members.sparkSession
-    import spark.implicits._
-    val cap = cfg.saltedMaxBlockSize
     val band = cfg.band
-    members.where(col("n") >= 2 && col("n") <= cap)
-      .select($"ids".as[Array[Long]], $"lens".as[Array[Int]])
-      .flatMap { case (ids, lens) =>
-        Buckets.localPairs[Int](ids.indices, cap, ids(_),
-          (i, j) => math.abs(lens(i) - lens(j)) < band)
-      }
-      .toDF("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    Buckets.groupPairs(members, cfg.saltedMaxBlockSize, (a, b) => math.abs(a - b) < band)
   }
 
   /** The mega-block drop (> saltedMaxBlockSize, the shared-boilerplate

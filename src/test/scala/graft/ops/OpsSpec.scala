@@ -1,12 +1,15 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-data pipeline operators: dedup family, similarity search,
   * text analysis, multimodal plumbing. */
-class OpsSpec extends AnyFunSuite with SparkTestBase {
+class OpsSpec extends AnyFunSuite with SparkTestBase with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -217,9 +220,16 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     val rnd = new scala.util.Random(7)
     for (_ <- 1 to 5) {
       val n = 40 + rnd.nextInt(60)
-      val rows = (0 until n).map(i => (s"g${rnd.nextInt(8)}", i.toLong))
+      val random = (0 until n).map(i => (s"g${rnd.nextInt(8)}", i.toLong))
       val cap = 3 + rnd.nextInt(10)
-      val df = rows.toDF("key", "id")
+      // groups at the cap's edges, with ids shared with the random groups
+      // so the pair dedup has work; rows dealt round-robin over 8
+      // partitions so every group is merged from partial buffers
+      val edges = Seq(cap - 1, cap, cap + 1, 2 * cap).flatMap { size =>
+        rnd.shuffle((0L until 200L).toVector).take(size).map(id => (s"e$size", id))
+      }
+      val rows = random ++ edges
+      val df = rnd.shuffle(rows).toDF("key", "id").repartition(8)
       val got = Buckets.cappedSelfJoinPairs(df, Seq("key"), cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val naive = rows.groupBy(_._1).values.filter(g => g.size >= 2 && g.size <= cap)
@@ -229,6 +239,17 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
         }.toSet
       assert(got == naive, s"cap=$cap n=$n")
     }
+  }
+
+  test("cappedSelfJoinPairs shuffles twice and joins nothing") {
+    val rows = (0 until 40).map(i => (i % 5, i.toLong)) ++ (100 until 200).map(i => (9, i.toLong))
+    val pairs = Buckets.cappedSelfJoinPairs(rows.toDF("key", "id"), Seq("key"), maxGroup = 64)
+    pairs.collect()
+    // the final AQE plan, read after the action
+    val plan = pairs.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 2, plan)
+    assert(collect(plan) { case e: BroadcastExchangeExec => e }.isEmpty, plan)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
   }
 
   test("minhash est_jaccard is the signature match fraction") {

@@ -300,18 +300,19 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     // a checkpointed (parquet) corpus, as ErRunner reads it: Spark does not
     // match exchanges over two scans of one in-memory cache, so a cached
     // corpus is broadcast per side whatever the attach plan looks like
-    val dir = java.nio.file.Files.createTempDirectory("er-attach").toString
-    corpus.write.mode("overwrite").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val attached = Er.withContents(Er.candidatePairs(Er.blocks(stored, cfg), cfg), stored)
-    attached.collect()
-    // the final AQE plan, read after the action: reuse is decided as
-    // stages materialize, so the initial plan still lists two exchanges
-    val plan = attached.queryExecution.executedPlan
-    val corpusSide = collect(plan) {
-      case e: BroadcastExchangeExec if e.output.exists(_.dataType == BinaryType) => e }
-    assert(corpusSide.size == 1, plan)
-    assert(collect(plan) { case e: ReusedExchangeExec => e }.size == 1, plan)
+    withWorkDir("er-attach") { dir =>
+      corpus.write.mode("overwrite").parquet(dir)
+      val stored = spark.read.parquet(dir)
+      val attached = Er.withContents(Er.candidatePairs(Er.blocks(stored, cfg), cfg), stored)
+      attached.collect()
+      // the final AQE plan, read after the action: reuse is decided as
+      // stages materialize, so the initial plan still lists two exchanges
+      val plan = attached.queryExecution.executedPlan
+      val corpusSide = collect(plan) {
+        case e: BroadcastExchangeExec if e.output.exists(_.dataType == BinaryType) => e }
+      assert(corpusSide.size == 1, plan)
+      assert(collect(plan) { case e: ReusedExchangeExec => e }.size == 1, plan)
+    }
   }
 
   /** Component minimum of every node of an undirected edge list: the
@@ -336,6 +337,18 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(key, on)
     try body finally spark.conf.unset(key)
+  }
+
+  /** Runs `body` on a fresh `java.io.tmpdir` directory named `prefix…`,
+    * deleting the whole tree afterwards, pass or fail. */
+  private def withWorkDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally {
+      val tree = java.nio.file.Files.walk(dir)
+      try tree.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally tree.close()
+    }
   }
 
   /** Spark jobs started while `body` runs on this thread, told apart by
@@ -370,94 +383,97 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("resume: completed stages are not recomputed; output identical") {
-    val dir = java.nio.file.Files.createTempDirectory("er-resume").toString
-    val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    assert(r1.computed == ErRunner.Stages)
-    val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
+    withWorkDir("er-resume") { dir =>
+      val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+      assert(r1.computed == ErRunner.Stages)
+      val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
 
-    // kill after 'scored': drop the downstream checkpoint, re-run
-    val r2 = new graft.io.StageRunner(spark, dir)
-    r2.invalidate("entities")
-    val r3 = ErRunner.run(spark, dir, cfg)(
-      sys.error("corpus must not be recomputed on resume"))
-    assert(r3.computed == Seq("entities"))
-    val ent2 = spark.read.parquet(s"$dir/entities").collect().toSet
-    assert(ent1 == ent2)
+      // kill after 'scored': drop the downstream checkpoint, re-run
+      val r2 = new graft.io.StageRunner(spark, dir)
+      r2.invalidate("entities")
+      val r3 = ErRunner.run(spark, dir, cfg)(
+        sys.error("corpus must not be recomputed on resume"))
+      assert(r3.computed == Seq("entities"))
+      val ent2 = spark.read.parquet(s"$dir/entities").collect().toSet
+      assert(ent1 == ent2)
 
-    // untouched second run resumes everything
-    val r4 = ErRunner.run(spark, dir, cfg)(
-      sys.error("corpus must not be recomputed on full resume"))
-    assert(r4.computed.isEmpty)
+      // untouched second run resumes everything
+      val r4 = ErRunner.run(spark, dir, cfg)(
+        sys.error("corpus must not be recomputed on full resume"))
+      assert(r4.computed.isEmpty)
 
-    // per-partition scoring lineage was written and accounts for all pairs
-    val lin = r1.readLineage("scored_partitions")
-    val pairTotal = spark.read.parquet(s"$dir/scored").count()
-    assert(lin.agg(sum("pair_count")).head().getLong(0) == pairTotal)
-    assert(lin.agg(sum("cells_expanded")).head().getLong(0) > 0L)
+      // per-partition scoring lineage was written and accounts for all pairs
+      val lin = r1.readLineage("scored_partitions")
+      val pairTotal = spark.read.parquet(s"$dir/scored").count()
+      assert(lin.agg(sum("pair_count")).head().getLong(0) == pairTotal)
+      assert(lin.agg(sum("cells_expanded")).head().getLong(0) > 0L)
 
-    // blocking-policy lineage: the mega-block recall policy is observable
-    val policy = r1.readLineage("blocking_policy").head()
-    assert(policy.schema.fieldNames.toSeq ==
-      Seq("n_blocks_dropped", "n_rows_dropped", "max_block_size"))
-    assert(policy.getLong(0) >= 0L && policy.getLong(2) >= 1L)
+      // blocking-policy lineage: the mega-block recall policy is observable
+      val policy = r1.readLineage("blocking_policy").head()
+      assert(policy.schema.fieldNames.toSeq ==
+        Seq("n_blocks_dropped", "n_rows_dropped", "max_block_size"))
+      assert(policy.getLong(0) >= 0L && policy.getLong(2) >= 1L)
+    }
   }
 
   test("incremental ingest: checkpointed assignment resumes; merged entities cover corpus + batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("er-ingest").toString
-    ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    val snapLocal = spark.read.parquet(s"$dir/corpus")
-      .select("id", "lang", "content").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val batchRows = snapLocal.filter(_._1 % 10 == 0).map { case (id, lang, c) =>
-      (id + 10000000L, lang, c.dropRight(4)) }.toSeq :+
-      ((90000001L, snapLocal.head._2, "z" * 400))
-    val r1 = ErRunner.runIncremental(spark, dir, "crawl1", cfg)(
-      batchRows.toDF("id", "lang", "content"))
-    assert(r1.computed == Seq("batch", "assigned", "entities_merged"))
-    val merged = spark.read.parquet(s"$dir/ingest/crawl1/entities_merged")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(merged.size == snapLocal.length + batchRows.size)
-    // near-dup batch docs attached to their original's entity; the novel
-    // z-doc opened its own
-    val ent = spark.read.parquet(s"$dir/entities").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    batchRows.dropRight(1).foreach { case (bid, _, _) =>
-      assert(merged(bid) == ent(bid - 10000000L), s"batch doc $bid") }
-    assert(merged(90000001L) == 90000001L)
-    // resume: nothing recomputed (the batch thunk would throw)
-    val r2 = ErRunner.runIncremental(spark, dir, "crawl1", cfg)(
-      sys.error("batch must not be recomputed on resume"))
-    assert(r2.computed.isEmpty)
-    // dropped-mass lineage rides next to the assignment
-    val lin = r1.readLineage("ingest_dropped").head()
-    assert(lin.schema.fieldNames.toSeq == Seq("n_buckets_dropped", "n_rows_dropped"))
-    assert(lin.getLong(0) >= 0L)
-    // ingest without a completed full run fails fast
-    intercept[IllegalArgumentException](ErRunner.runIncremental(
-      spark, "/tmp/er-ingest-missing", "t", cfg)(sys.error("unreachable")))
+    withWorkDir("er-ingest") { dir =>
+      ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+      val snapLocal = spark.read.parquet(s"$dir/corpus")
+        .select("id", "lang", "content").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val batchRows = snapLocal.filter(_._1 % 10 == 0).map { case (id, lang, c) =>
+        (id + 10000000L, lang, c.dropRight(4)) }.toSeq :+
+        ((90000001L, snapLocal.head._2, "z" * 400))
+      val r1 = ErRunner.runIncremental(spark, dir, "crawl1", cfg)(
+        batchRows.toDF("id", "lang", "content"))
+      assert(r1.computed == Seq("batch", "assigned", "entities_merged"))
+      val merged = spark.read.parquet(s"$dir/ingest/crawl1/entities_merged")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(merged.size == snapLocal.length + batchRows.size)
+      // near-dup batch docs attached to their original's entity; the novel
+      // z-doc opened its own
+      val ent = spark.read.parquet(s"$dir/entities").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      batchRows.dropRight(1).foreach { case (bid, _, _) =>
+        assert(merged(bid) == ent(bid - 10000000L), s"batch doc $bid") }
+      assert(merged(90000001L) == 90000001L)
+      // resume: nothing recomputed (the batch thunk would throw)
+      val r2 = ErRunner.runIncremental(spark, dir, "crawl1", cfg)(
+        sys.error("batch must not be recomputed on resume"))
+      assert(r2.computed.isEmpty)
+      // dropped-mass lineage rides next to the assignment
+      val lin = r1.readLineage("ingest_dropped").head()
+      assert(lin.schema.fieldNames.toSeq == Seq("n_buckets_dropped", "n_rows_dropped"))
+      assert(lin.getLong(0) >= 0L)
+      // ingest without a completed full run fails fast
+      intercept[IllegalArgumentException](ErRunner.runIncremental(
+        spark, "/tmp/er-ingest-missing", "t", cfg)(sys.error("unreachable")))
+    }
   }
 
   test("checkpoint tables are partition-pruned: a lang-scoped read touches only its directory") {
-    val dir = java.nio.file.Files.createTempDirectory("er-prune").toString
-    ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    val all = spark.read.parquet(s"$dir/corpus")
-    val langs = all.select("lang").distinct().collect().map(_.getString(0))
-    assert(langs.length >= 2, "need multiple langs to demonstrate pruning")
-    val one = langs.head
-    val scanned = all.where(col("lang") === one)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(scanned.nonEmpty && scanned.forall(_.contains(s"lang=$one")),
-      s"lang-filtered read must stay inside its partition dir: $scanned")
-    val totalFiles = all.select(input_file_name()).distinct().count()
-    assert(scanned.length < totalFiles,
-      s"pruned read ($one) must touch fewer files than the full table")
-    // pairs: hash-bucketed — a single-bucket read prunes the same way
-    val pairs = spark.read.parquet(s"$dir/pairs")
-    assert(pairs.columns.contains("pair_bucket"))
-    val bucketFiles = pairs.where(col("pair_bucket") === 0)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(bucketFiles.forall(_.contains("pair_bucket=0")))
+    withWorkDir("er-prune") { dir =>
+      ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+      val all = spark.read.parquet(s"$dir/corpus")
+      val langs = all.select("lang").distinct().collect().map(_.getString(0))
+      assert(langs.length >= 2, "need multiple langs to demonstrate pruning")
+      val one = langs.head
+      val scanned = all.where(col("lang") === one)
+        .select(input_file_name()).distinct().collect().map(_.getString(0))
+      assert(scanned.nonEmpty && scanned.forall(_.contains(s"lang=$one")),
+        s"lang-filtered read must stay inside its partition dir: $scanned")
+      val totalFiles = all.select(input_file_name()).distinct().count()
+      assert(scanned.length < totalFiles,
+        s"pruned read ($one) must touch fewer files than the full table")
+      // pairs: hash-bucketed — a single-bucket read prunes the same way
+      val pairs = spark.read.parquet(s"$dir/pairs")
+      assert(pairs.columns.contains("pair_bucket"))
+      val bucketFiles = pairs.where(col("pair_bucket") === 0)
+        .select(input_file_name()).distinct().collect().map(_.getString(0))
+      assert(bucketFiles.forall(_.contains("pair_bucket=0")))
+    }
   }
 
   test("blockingLineage counts exactly the blocks over the salted cap") {
@@ -515,54 +531,59 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("ErRunner.run on the spec corpus starts at most 25 jobs") {
-    val dir = java.nio.file.Files.createTempDirectory("er-jobs").toString
-    val source = Corpus.generate(spark, genCfg).toDF()
-    val jobs = jobsStartedBy(ErRunner.run(spark, dir, cfg)(source))
-    info(s"$jobs jobs")
-    assert(jobs <= 25, s"$jobs jobs")
+    withWorkDir("er-jobs") { dir =>
+      val source = Corpus.generate(spark, genCfg).toDF()
+      val jobs = jobsStartedBy(ErRunner.run(spark, dir, cfg)(source))
+      info(s"$jobs jobs")
+      assert(jobs <= 25, s"$jobs jobs")
+    }
   }
 
   test("ErRunner.run writes the blocking_policy row blockingLineage computes") {
     // a cap of 2 drops every block of three or more members
     val capped = cfg.copy(saltedMaxBlockSize = 2)
-    val dir = java.nio.file.Files.createTempDirectory("er-policy").toString
-    val r = ErRunner.run(spark, dir, capped)(Corpus.generate(spark, genCfg).toDF())
-    val written = r.readLineage("blocking_policy")
-    val expected = Er.blockingLineage(
-      Er.blocks(spark.read.parquet(s"$dir/corpus"), capped), capped)
-    assert(written.schema.fieldNames.toSeq == expected.schema.fieldNames.toSeq)
-    assert(written.collect().toSeq == expected.collect().toSeq)
-    assert(written.head().getLong(0) > 0L)
+    withWorkDir("er-policy") { dir =>
+      val r = ErRunner.run(spark, dir, capped)(Corpus.generate(spark, genCfg).toDF())
+      val written = r.readLineage("blocking_policy")
+      val expected = Er.blockingLineage(
+        Er.blocks(spark.read.parquet(s"$dir/corpus"), capped), capped)
+      assert(written.schema.fieldNames.toSeq == expected.schema.fieldNames.toSeq)
+      assert(written.collect().toSeq == expected.collect().toSeq)
+      assert(written.head().getLong(0) > 0L)
+    }
   }
 
   test("resume: a recomputed stage recomputes every later stage") {
-    val dir = java.nio.file.Files.createTempDirectory("er-recompute").toString
-    ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
-    new graft.io.StageRunner(spark, dir).invalidate("pairs")
-    val r = ErRunner.run(spark, dir, cfg)(
-      sys.error("corpus must not be recomputed on resume"))
-    assert(r.computed == Seq("pairs", "scored", "entities"))
-    assert(spark.read.parquet(s"$dir/entities").collect().toSet == ent1)
+    withWorkDir("er-recompute") { dir =>
+      ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+      val ent1 = spark.read.parquet(s"$dir/entities").collect().toSet
+      new graft.io.StageRunner(spark, dir).invalidate("pairs")
+      val r = ErRunner.run(spark, dir, cfg)(
+        sys.error("corpus must not be recomputed on resume"))
+      assert(r.computed == Seq("pairs", "scored", "entities"))
+      assert(spark.read.parquet(s"$dir/entities").collect().toSet == ent1)
+    }
   }
 
   test("a file:// URI work directory runs and fully resumes") {
-    val dir = java.nio.file.Files.createTempDirectory("er-uri").toUri.toString
-    assert(dir.startsWith("file:/"))
-    val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-    assert(r1.computed == ErRunner.Stages)
-    val r2 = ErRunner.run(spark, dir, cfg)(
-      sys.error("corpus must not be recomputed on resume"))
-    assert(r2.computed.isEmpty)
-    val batch = spark.read.parquet(s"$dir/corpus").where(col("id") % 10 === 0)
-      .select((col("id") + 10000000L).as("id"), col("lang"), col("content"))
-    val i1 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(batch)
-    assert(i1.computed == Seq("batch", "assigned", "entities_merged"))
-    val i2 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(
-      sys.error("batch must not be recomputed on resume"))
-    assert(i2.computed.isEmpty)
-    val runner = new graft.io.StageRunner(spark, dir)
-    runner.invalidate("entities")
-    assert(!runner.isComplete("entities") && runner.isComplete("scored"))
+    withWorkDir("er-uri") { local =>
+      val dir = new java.io.File(local).toURI.toString
+      assert(dir.startsWith("file:/"))
+      val r1 = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+      assert(r1.computed == ErRunner.Stages)
+      val r2 = ErRunner.run(spark, dir, cfg)(
+        sys.error("corpus must not be recomputed on resume"))
+      assert(r2.computed.isEmpty)
+      val batch = spark.read.parquet(s"$dir/corpus").where(col("id") % 10 === 0)
+        .select((col("id") + 10000000L).as("id"), col("lang"), col("content"))
+      val i1 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(batch)
+      assert(i1.computed == Seq("batch", "assigned", "entities_merged"))
+      val i2 = ErRunner.runIncremental(spark, dir, "crawl", cfg)(
+        sys.error("batch must not be recomputed on resume"))
+      assert(i2.computed.isEmpty)
+      val runner = new graft.io.StageRunner(spark, dir)
+      runner.invalidate("entities")
+      assert(!runner.isComplete("entities") && runner.isComplete("scored"))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{AlignerCli, SparkTestBase}
-import graft.core.{Levenshtein, Packing}
+import graft.core.Levenshtein
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -91,25 +91,6 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     val back = SequenceFile.read(spark, dir).orderBy("pair_id").collect()
     assert(back.map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq ==
       Seq((0L, "ACGT", "AC"), (1L, "T", "TTT")))
-  }
-
-  test("2-bit packing matches the reference encoding and roundtrips") {
-    // reference: (ascii & 6) >> 1 -> A=00 C=01 T=10 G=11
-    assert(Packing.pack("A")(0) == 0x00.toByte)
-    assert(Packing.pack("C")(0) == 0x40.toByte) // 01 in top bits
-    assert(Packing.pack("T")(0) == 0x80.toByte)
-    assert(Packing.pack("G")(0) == 0xC0.toByte)
-    assert(Packing.pack("ACTG").length == 1)
-    assert(Packing.unpackToString(Packing.pack("ACTG"), 4) == "ACTG")
-    val rnd = new Random(5)
-    for (_ <- 1 to 50) {
-      val s = (0 until rnd.nextInt(100)).map(_ => "ACGT"(rnd.nextInt(4))).mkString
-      assert(Packing.unpackToString(Packing.pack(s), s.length) == s)
-      assert(Packing.pack(s).length == (s.length + 3) / 4)
-    }
-    // non-ACGT bytes are projected, not rejected (reference behavior):
-    // 'E' = 0x45 -> (0x45 & 6) >> 1 = 0b10 = T
-    assert(Packing.unpackToString(Packing.pack("E"), 1) == "T")
   }
 
   test("AlignerCli runs a sequence file end-to-end with reference semantics") {
