@@ -176,9 +176,12 @@ object Er {
     * lineage inputs (cells expanded, partition id) alongside the score.
     *
     * Scores the partitions it is given — one task per input partition —
-    * and building the frame starts no Spark job. Width is set by the code
-    * that builds the rows: [[withContents]] widens the skinny pairs in its
-    * broadcast branch, [[assignIncremental]] repartitions its candidates.
+    * and building the frame starts no Spark job. `id_a` and `id_b` are
+    * passed through untouched: they only label the pair, and
+    * [[attachBuckets]] passes a snapshot entity as `id_b`. Width is set by
+    * the code that builds the rows: [[withContents]] widens the skinny
+    * pairs in its broadcast branch, [[assignIncremental]] repartitions its
+    * candidates.
     */
   def score(pairsWithContents: DataFrame, cfg: ErConfig): DataFrame = {
     val spark = pairsWithContents.sparkSession
@@ -371,6 +374,10 @@ object Er {
     * quadratic. The |len diff| < 64 filter is sound, not just a
     * heuristic: WFA distance >= |len diff| and tau < 64.
     *
+    * [[ingestBuckets]] (the bucket sizes) then [[attachBuckets]] (the
+    * cap, the candidates, scoring and the per-doc answer); ErRunner
+    * observes [[ingestDroppedPolicy]] on the sizes between the two.
+    *
     * @param snapshot (id, lang, content, entity) — the clustered corpus
     * @param batch    (id, lang, content) — new docs, ids disjoint
     * @param cfg      band/tau as in [[score]]
@@ -384,14 +391,29 @@ object Er {
     *   would re-introduce the batch self-join this operator exists to
     *   avoid). */
   def assignIncremental(snapshot: DataFrame, batch: DataFrame,
-                        cfg: ErConfig, bucketCap: Int = 256): DataFrame = {
-    val sn = snapshot.select(col("id").as("id_s"), col("lang"),
-      col("content").as("content_s"), col("entity"),
+                        cfg: ErConfig, bucketCap: Int = 256): DataFrame =
+    attachBuckets(snapshot, batch, ingestBuckets(snapshot), cfg, bucketCap)
+
+  /** One row per snapshot (lang, 64-wide length bucket): its doc count
+    * `gsz`. The one aggregation behind both the ingest bucket cap and its
+    * dropped-mass lineage; skinny keys only, never content bytes. */
+  private[graft] def ingestBuckets(snapshot: DataFrame): DataFrame =
+    snapshot.groupBy(col("lang"), floor(length(col("content")) / 64).as("bucket"))
+      .agg(count(lit(1)).as("gsz"))
+
+  /** [[assignIncremental]] given the snapshot's [[ingestBuckets]] rows:
+    * buckets of at most `bucketCap` docs take part. Each candidate row
+    * carries the snapshot doc's entity as `id_b`, which [[score]] passes
+    * through untouched, so the per-doc answer is a groupBy of the scored
+    * rows with no join back to the snapshot (one snapshot row per
+    * candidate: every snapshot doc has a single home bucket). */
+  private[graft] def attachBuckets(snapshot: DataFrame, batch: DataFrame, buckets: DataFrame,
+                                   cfg: ErConfig, bucketCap: Int): DataFrame = {
+    val sn = snapshot.select(col("lang"), col("content").as("content_s"), col("entity"),
       floor(length(col("content")) / 64).as("bucket"),
       length(col("content")).as("len_s"))
     // eligible snapshot buckets: tiny (lang, bucket) list, AQE-broadcast
-    val elig = sn.groupBy("lang", "bucket").agg(count(lit(1)).as("gsz"))
-      .where(col("gsz") <= bucketCap).select("lang", "bucket")
+    val elig = buckets.where(col("gsz") <= bucketCap).select("lang", "bucket")
     val bt = batch.select(col("id"), col("lang"), col("content"),
       length(col("content")).as("len"),
       explode(array(floor(length(col("content")) / 64) - 1,
@@ -402,35 +424,42 @@ object Er {
       .where(abs(col("len") - col("len_s")) < 64)
     // the candidate join arrives AQE-coalesced to one partition (few
     // bytes, much WFA work): widen it so scoring runs on every core
-    val scored = score(cand.select(col("id").as("id_a"), col("id_s").as("id_b"),
+    val scored = score(cand.select(col("id").as("id_a"), col("entity").as("id_b"),
         col("content").cast("binary").as("bytes_a"),
         col("content_s").cast("binary").as("bytes_b"))
       .repartition(cand.sparkSession.sparkContext.defaultParallelism * 2), cfg)
     val matches = scored
       .where(!col("saturated") && col("distance") <= cfg.tau)
-      // sn has exactly one row per snapshot doc (single home bucket)
-      .join(sn.select(col("id_s").as("id_b"), col("entity")), "id_b")
       .groupBy(col("id_a").as("id"))
-      .agg(min("entity").as("matched_entity"), count(lit(1)).as("n_matches"))
+      .agg(min("id_b").as("matched_entity"), count(lit(1)).as("n_matches"))
     batch.select("id").join(matches, Seq("id"), "left_outer")
       .select(col("id"),
         coalesce(col("matched_entity"), col("id")).as("entity"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"))
   }
 
+  /** The ingest bucket cap as aggregate expressions over [[ingestBuckets]]
+    * rows: (n_buckets_dropped, n_rows_dropped), the observable recall cost
+    * of the hot-block policy. ErRunner.runIncremental observes these on the
+    * assignment write; [[incrementalDroppedStats]] aggregates them on
+    * their own. */
+  private[graft] def ingestDroppedPolicy(bucketCap: Int): Seq[Column] = {
+    val over = col("gsz") > bucketCap
+    Seq(
+      count(when(over, 1L)).as("n_buckets_dropped"),
+      coalesce(sum(when(over, col("gsz"))), lit(0L)).as("n_rows_dropped"))
+  }
+
   /** Lineage for [[assignIncremental]]'s snapshot-bucket cap (the
     * [[graft.ops.RangeJoin.droppedStats]] shape): how many (lang,
     * length-bucket) groups the cap removed and how many snapshot rows
-    * they carried — the observable recall cost of the hot-block policy,
-    * written by ingest runners next to the assignment output. Two
-    * map-side-combinable aggregations of skinny keys; never touches
-    * content bytes. */
-  def incrementalDroppedStats(snapshot: DataFrame, bucketCap: Int): DataFrame =
-    snapshot.select(col("lang"), floor(length(col("content")) / 64).as("bucket"))
-      .groupBy("lang", "bucket").agg(count(lit(1)).as("gsz"))
-      .where(col("gsz") > bucketCap)
-      .agg(count(lit(1)).as("n_buckets_dropped"),
-        coalesce(sum("gsz"), lit(0L)).as("n_rows_dropped"))
+    * they carried — the row ingest runners write next to the assignment
+    * output. One map-side-combinable aggregation of skinny keys
+    * ([[ingestBuckets]]) and a global one; never touches content bytes. */
+  def incrementalDroppedStats(snapshot: DataFrame, bucketCap: Int): DataFrame = {
+    val policy = ingestDroppedPolicy(bucketCap)
+    ingestBuckets(snapshot).agg(policy.head, policy.tail: _*)
+  }
 
   // ------------------------------------------------------------ full pipeline
 

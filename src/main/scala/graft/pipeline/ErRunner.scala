@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.io.StageRunner
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
@@ -43,10 +43,7 @@ object ErRunner {
       Er.blockPairs(members, cfg)
         .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(PairBuckets)).cast("int"))
     }
-    if (r.computed.contains("pairs")) {
-      val row = Await.result(policy.future, Duration.Inf)
-      r.lineage("blocking_policy", spark.createDataFrame(java.util.List.of(row), row.schema))
-    }
+    if (r.computed.contains("pairs")) r.lineage("blocking_policy", observed(policy))
     val scored = r.stage("scored")(Er.score(Er.withContents(pairs, corpus), cfg))
     if (r.computed.contains("scored")) {
       r.lineage("scored_partitions", Er.scoreLineage(scored))
@@ -64,10 +61,14 @@ object ErRunner {
     * (a killed ingest resumes at the assignment checkpoint instead of
     * re-scoring the batch). Each crawl gets its own `ingest/<tag>/`
     * stage directory, so successive crawls never clobber each other and
-    * `entities_merged` of one tag can seed the next. Lineage: the
-    * bucket-cap dropped-mass table ([[Er.incrementalDroppedStats]])
-    * rides next to the assignment, the observable recall cost of the
-    * hot-block policy.
+    * `entities_merged` of one tag can seed the next.
+    *
+    * Three checkpoint writes (`batch`, `assigned`, `entities_merged`)
+    * and the two snapshot reads are the whole Spark cost of a crawl: the
+    * bucket-cap dropped-mass row ([[Er.incrementalDroppedStats]]'s
+    * `ingest_dropped`, the observable recall cost of the hot-block
+    * policy) is observed on the bucket-size aggregation the assignment
+    * runs anyway, so it takes no second pass over the snapshot.
     *
     * @return the runner; `entities_merged` is the updated entity table
     *   (old entities ∪ batch assignments) for downstream readers. */
@@ -83,13 +84,24 @@ object ErRunner {
     val snapshot = corpus.select("id", "lang", "content").join(entities, "id")
     val r = new StageRunner(spark, s"$workDir/ingest/$tag")
     val batch = r.stage("batch", Seq("lang"))(batchSource)
-    val assigned = r.stage("assigned")(
-      Er.assignIncremental(snapshot, batch, cfg, bucketCap))
+    val dropped = Observation("graft_ingest_dropped")
+    val assigned = r.stage("assigned") {
+      val rules = Er.ingestDroppedPolicy(bucketCap)
+      val buckets = Er.ingestBuckets(snapshot).observe(dropped, rules.head, rules.tail: _*)
+      Er.attachBuckets(snapshot, batch, buckets, cfg, bucketCap)
+    }
     if (r.computed.contains("assigned")) {
-      r.lineage("ingest_dropped", Er.incrementalDroppedStats(snapshot, bucketCap))
+      // an empty batch lets AQE prune the joins before the bucket sizes
+      // run, so nothing is observed: then they are aggregated on their own
+      val row = observed(dropped)
+      if (row.length > 0) r.lineage("ingest_dropped", row)
+      else r.lineage("ingest_dropped", Er.incrementalDroppedStats(snapshot, bucketCap))
     }
     r.stage("entities_merged")(
       entities.unionByName(assigned.select("id", "entity")))
     r
   }
+
+  /** The row of an `Observation` whose query has run. */
+  private def observed(o: Observation): Row = Await.result(o.future, Duration.Inf)
 }
