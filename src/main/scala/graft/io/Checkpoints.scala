@@ -1,5 +1,6 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -12,24 +13,33 @@ import org.apache.spark.sql.types._
 import scala.collection.mutable
 
 /** Checkpointed stage runner: every pipeline stage writes a partitioned
-  * Parquet table (Iceberg-shaped layout — a directory per table with
-  * atomic `_SUCCESS` commit markers; swap-in point for an Iceberg catalog
-  * when the runtime jar is available, see SURVEY.md §7) and is read back,
-  * so a killed run resumes at the last completed stage (BASELINE.json
+  * Parquet table (Iceberg-shaped layout — a directory per table with an
+  * atomic commit record; swap-in point for an Iceberg catalog when the
+  * runtime jar is available, see SURVEY.md §7) and is read back, so a
+  * killed run resumes at the last completed stage (BASELINE.json
   * north_rule "resumable from checkpoint"). A lineage row per stage and a
   * per-partition lineage table for the scoring stage are written alongside
   * (the Spark re-expression of the reference's wall-time + per-batch debug
   * metrics, /root/reference/src/aligner.cu:198-233, utils/logger.h:54-59).
-  * Checks and deletes go through the Hadoop `FileSystem` of `baseDir`, so
-  * any Hadoop URI (`file://`, `hdfs://`, `s3a://`) works as a work
-  * directory.
+  * Checks, deletes and commit records go through the Hadoop `FileSystem`
+  * of `baseDir`, so any Hadoop URI (`file://`, `hdfs://`, `s3a://`) works
+  * as a work directory.
+  *
+  * This class is the only code that knows where a stage lives, when it is
+  * complete and how it is read. A stage `name` is the directory
+  * `baseDir/name`; it is complete when it holds its commit record
+  * `_stage.json`, the schema the table is read with (data columns, then
+  * partition columns, every field nullable), written after the Parquet
+  * write and the stage's lineage row. A directory without one (a killed
+  * write, or an older layout with only `_SUCCESS`) is recomputed. Every
+  * stage, computed or resumed, is read by [[read]] with its committed
+  * schema, so no read infers a schema and none starts a Spark job.
   *
   * A computed stage costs its write and nothing more: its row count rides
-  * the write as an `observe()`, its lineage row is written on the driver
-  * (see [[lineage]]), and it is read back with the schema it was written
-  * with, so no schema-inference job runs. A 1-task Spark job costs about
-  * 0.1–0.2 s of wall time however little it does, which adds up over a
-  * per-crawl ingest (CLAUDE.md, job-count lesson).
+  * the write as an `observe()` and its lineage row is written on the
+  * driver (see [[lineage]]). A 1-task Spark job costs about 0.1–0.2 s of
+  * wall time however little it does, which adds up over a per-crawl
+  * ingest (CLAUDE.md, job-count lesson).
   */
 final class StageRunner(spark: SparkSession, baseDir: String) {
 
@@ -47,8 +57,11 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
   private val StageLineage = StructType(Seq(StructField("stage", StringType),
     StructField("rows", LongType), StructField("wall_ms", DoubleType)))
 
-  /** True when the stage's checkpoint carries its `_SUCCESS` marker. */
-  def isComplete(name: String): Boolean = fs.exists(new Path(path(name), "_SUCCESS"))
+  /** The stage's commit record: its read schema as JSON. */
+  private def record(name: String) = new Path(path(name), "_stage.json")
+
+  /** True when the stage's checkpoint carries its commit record. */
+  def isComplete(name: String): Boolean = fs.exists(record(name))
 
   /** Run (or resume) a stage. `compute` is only invoked when the stage's
     * checkpoint is absent or incomplete, or when an earlier stage of this
@@ -63,13 +76,15 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
     * the checkpoint write as an `observe()` metric — one job per stage,
     * never a second count-the-table scan.
     *
-    * A computed stage is read back with the schema Spark reads the table
-    * with: data columns, then `partitionCols`, every field nullable. A
-    * resumed stage infers it from the files. */
+    * A computed stage drops its old commit record first, so a run that
+    * dies before the write cannot leave the old table committed after an
+    * upstream stage changed, and commits the new one last. Either way
+    * the stage is returned by [[read]]. */
   def stage(name: String, partitionCols: Seq[String] = Nil)
            (compute: => DataFrame): DataFrame = {
     if (computed.nonEmpty || !isComplete(name)) {
       computed += name
+      fs.delete(record(name), false)
       val t0 = System.nanoTime()
       val obs = org.apache.spark.sql.Observation(s"graft_lineage_$name")
       val df = compute.observe(obs, count(lit(1)).as("rows"))
@@ -81,8 +96,20 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
       lineage(name, Seq(Row(name, rows, wallMs)), StageLineage)
       val written = StructType(df.schema.filterNot(f => partitionCols.contains(f.name)) ++
         partitionCols.map(df.schema(_)))
-      spark.read.schema(nullable(written).asInstanceOf[StructType]).parquet(path(name))
-    } else spark.read.parquet(path(name))
+      val out = fs.create(record(name), true)
+      try out.write(nullable(written).json.getBytes(UTF_8)) finally out.close()
+    }
+    read(name)
+  }
+
+  /** A completed stage's table, read with its committed schema. Fails
+    * naming the stage and its directory when it has no commit record. */
+  def read(name: String): DataFrame = {
+    require(isComplete(name),
+      s"stage $name has no commit record in ${path(name)}: it was never completed")
+    val in = fs.open(record(name))
+    val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(path(name))
   }
 
   /** Write an arbitrary lineage/metrics table for a stage (e.g. the

@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import graft.io.StageRunner
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
@@ -12,20 +11,23 @@ import scala.concurrent.duration.Duration
   * (E1 lifecycle, SURVEY.md §3).
   *
   * Checkpoint layout: four stages, each one a resume point that saves a
-  * recomputation worth more than its write. `corpus` is Hive-partitioned
-  * by `lang` — blocking keys never cross languages, so a resumed (or
-  * lang-scoped) run prunes to the languages it touches. `pairs` computes
-  * the MinHash blocks inline (no blocks table: they are read once) and is
-  * Hive-partitioned into [[PairBuckets]] buckets by a hash of `id_a`, so
-  * a read of one bucket touches only its directory; the blocking-policy
-  * counts ride its write. `scored` holds every scored pair; `entities`
-  * clusters the match edges read from `scored` with the threshold filter
-  * pushed into the scan (no edges table). */
+  * recomputation worth more than its write. Where a stage lives, when it
+  * is complete (its commit record) and how it is read belong to
+  * [[StageRunner]] alone; this object names stages and reads them only
+  * through it. `corpus` is Hive-partitioned by `lang` — blocking keys
+  * never cross languages, so a resumed (or lang-scoped) run prunes to the
+  * languages it touches. `pairs` is a flat table that computes the MinHash
+  * blocks inline (no blocks table: they are read once); the
+  * blocking-policy counts ride its write. `scored` holds every scored
+  * pair; `entities` clusters the match edges read from `scored` with the
+  * threshold filter pushed into the scan (no edges table). */
 object ErRunner {
 
   val Stages: Seq[String] = Seq("corpus", "pairs", "scored", "entities")
 
-  /** Hash-bucket fan-out for the pairs checkpoint. */
+  /** Hash-bucket fan-out of the `pair_bucket` layout that `pairs` no
+    * longer uses; kept only because erbench's traced twin of [[run]]
+    * still writes that layout and compiles against this constant. */
   val PairBuckets = 16
 
   /** @param corpusSource computed only when the `corpus` stage is absent */
@@ -36,14 +38,15 @@ object ErRunner {
     // recall-policy observability: mass discarded by the mega-block drop,
     // observed on the per-block rows the pairs write aggregates anyway
     val policy = Observation("graft_blocking_policy")
-    val pairs = r.stage("pairs", Seq("pair_bucket")) {
+    val pairs = r.stage("pairs") {
       val rules = Er.blockingPolicy(cfg)
       val members = Er.blockMembers(Er.blocks(corpus, cfg), cfg)
         .observe(policy, rules.head, rules.tail: _*)
       Er.blockPairs(members, cfg)
-        .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(PairBuckets)).cast("int"))
     }
-    if (r.computed.contains("pairs")) r.lineage("blocking_policy", observed(policy))
+    if (r.computed.contains("pairs")) {
+      policyLineage(r, "blocking_policy", policy)(Er.blockingLineage(Er.blocks(corpus, cfg), cfg))
+    }
     val scored = r.stage("scored")(Er.score(Er.withContents(pairs, corpus), cfg))
     if (r.computed.contains("scored")) {
       r.lineage("scored_partitions", Er.scoreLineage(scored))
@@ -64,7 +67,9 @@ object ErRunner {
     * `entities_merged` of one tag can seed the next.
     *
     * Three checkpoint writes (`batch`, `assigned`, `entities_merged`)
-    * and the two snapshot reads are the whole Spark cost of a crawl: the
+    * are the whole Spark cost of a crawl. The snapshot is read with the
+    * schemas the full run committed (a missing or incomplete `corpus` or
+    * `entities` fails naming the stage), so reading it starts no job. The
     * bucket-cap dropped-mass row ([[Er.incrementalDroppedStats]]'s
     * `ingest_dropped`, the observable recall cost of the hot-block
     * policy) is observed on the bucket-size aggregation the assignment
@@ -76,11 +81,8 @@ object ErRunner {
                      cfg: ErConfig, bucketCap: Int = 256)
                     (batchSource: => DataFrame): StageRunner = {
     val full = new StageRunner(spark, workDir)
-    require(full.isComplete("corpus") && full.isComplete("entities"),
-      s"incremental ingest needs a completed full run in $workDir " +
-        "(corpus and entities checkpoints with _SUCCESS markers)")
-    val corpus = spark.read.parquet(s"$workDir/corpus")
-    val entities = spark.read.parquet(s"$workDir/entities")
+    val corpus = full.read("corpus")
+    val entities = full.read("entities")
     val snapshot = corpus.select("id", "lang", "content").join(entities, "id")
     val r = new StageRunner(spark, s"$workDir/ingest/$tag")
     val batch = r.stage("batch", Seq("lang"))(batchSource)
@@ -91,17 +93,20 @@ object ErRunner {
       Er.attachBuckets(snapshot, batch, buckets, cfg, bucketCap)
     }
     if (r.computed.contains("assigned")) {
-      // an empty batch lets AQE prune the joins before the bucket sizes
-      // run, so nothing is observed: then they are aggregated on their own
-      val row = observed(dropped)
-      if (row.length > 0) r.lineage("ingest_dropped", row)
-      else r.lineage("ingest_dropped", Er.incrementalDroppedStats(snapshot, bucketCap))
+      policyLineage(r, "ingest_dropped", dropped)(Er.incrementalDroppedStats(snapshot, bucketCap))
     }
     r.stage("entities_merged")(
       entities.unionByName(assigned.select("id", "entity")))
     r
   }
 
-  /** The row of an `Observation` whose query has run. */
-  private def observed(o: Observation): Row = Await.result(o.future, Duration.Inf)
+  /** Writes the policy row `o` observed on a stage write as the lineage
+    * table `name`, or `standalone`'s row when nothing was observed: an
+    * empty input lets AQE prune the plan before the observed aggregation
+    * runs, and the observation then comes back with no columns. */
+  private def policyLineage(r: StageRunner, name: String, o: Observation)
+                           (standalone: => DataFrame): Unit = {
+    val row = Await.result(o.future, Duration.Inf)
+    if (row.length > 0) r.lineage(name, row) else r.lineage(name, standalone)
+  }
 }
