@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *                    utils/sequence_reader.h:66-71) and memcpy's lines in
   *                    UNCHECKED (utils/sequence_reader.cu:166-179) — an
   *                    over-length line silently overflows its slot. graft
-  *                    enforces the same 2*len capacity but fails fast with
-  *                    a clear error instead; 0/absent = unbounded (buffers
-  *                    are sized dynamically).
+  *                    enforces the same 2*len capacity: the task aligning
+  *                    an over-length pair fails the job with an error
+  *                    naming it; 0/absent = unbounded (buffers are sized
+  *                    dynamically).
   *   -b <batch>       accepted for command-line parity and ignored. The
   *                    reference sizes each batch to fit GPU memory
   *                    (src/wavefront.cu:211-330); here each task streams
@@ -69,17 +70,10 @@ object AlignerCli {
     import spark.implicits._
     var pairs = SequenceFile.read(spark, c.file)
     if (c.num > 0) pairs = pairs.where(col("pair_id") < c.num)
-    if (c.seqLen > 0) {
-      // reference capacity parity: each slot holds 2*seq_len bytes
-      val cap = 2L * c.seqLen
-      val over = pairs.where(
-        length(col("pattern")) > cap || length(col("text")) > cap)
-      val bad = over.select(min("pair_id")).head()
-      require(bad.isNullAt(0),
-        s"sequence pair ${bad.getLong(0)} exceeds --seq-len capacity " +
-          s"(2*${c.seqLen} = $cap bytes); the reference would silently " +
-          "overflow its buffer here — rerun with a larger -l or drop it")
-    }
+    // reference capacity parity: each slot holds 2*seq_len bytes (0 = unbounded),
+    // checked per pair as it is aligned
+    val seqLen = c.seqLen
+    val cap = 2L * seqLen
     val band = c.band
     pairs
       .select($"pair_id".as[Long],
@@ -88,6 +82,10 @@ object AlignerCli {
       .mapPartitions { it =>
         val ws = new WfaWorkspace(band, withCigar = true)
         it.map { case (id, p, t) =>
+          require(cap <= 0 || (p.length <= cap && t.length <= cap),
+            s"sequence pair $id exceeds --seq-len capacity " +
+              s"(2*$seqLen = $cap bytes); the reference would silently " +
+              "overflow its buffer here — rerun with a larger -l or drop it")
           val r = Wfa.align(p, t, ws)
           (id, r.distance, r.saturated, r.cigar)
         }

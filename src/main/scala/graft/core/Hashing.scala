@@ -120,8 +120,6 @@ object Hashing {
     out
   }
 
-  @inline def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** Deterministic pseudo-random hyperplane component for (plane, dim) in
     * [-1, 1): two splitmix64 rounds over (seed, plane, dim). Seedable,
     * identical on every executor, no stored model — and, unlike Spark's

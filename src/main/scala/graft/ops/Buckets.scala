@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -29,10 +29,20 @@ object Buckets {
 
   /** Lineage of the cap policy: how many groups/rows the `maxGroup` cap
     * drops — observable recall cost, written by pipeline runners. */
-  def droppedStats(rows: DataFrame, keys: Seq[String], maxGroup: Int): DataFrame =
-    sizes(rows, keys).where(col("gsz") > maxGroup)
-      .agg(coalesce(count(lit(1)), lit(0L)).as("n_groups_dropped"),
-        coalesce(sum("gsz"), lit(0L)).as("n_rows_dropped"))
+  def droppedStats(rows: DataFrame, keys: Seq[String], maxGroup: Int): DataFrame = {
+    val (groups, dropped) = overCap(col("gsz"), maxGroup)
+    sizes(rows, keys).agg(groups.as("n_groups_dropped"), dropped.as("n_rows_dropped"))
+  }
+
+  /** The cap policy's recall cost as two aggregates over one row per
+    * group, `size` being its member count: the groups over `cap`, and the
+    * rows they carry (bigint, 0 when no group is over). Every dropped-mass
+    * lineage row (ER blocks, ingest buckets, [[droppedStats]]) is these
+    * two under its own names. */
+  private[graft] def overCap(size: Column, cap: Int): (Column, Column) = {
+    val over = size > cap
+    (count(when(over, 1L)), coalesce(sum(when(over, size)), lit(0L)))
+  }
 
   /** Distinct (id_a < id_b) pairs co-bucketed under `keys`, skipping groups
     * with more than `maxGroup` members. `rows` must have an `id` column

@@ -109,17 +109,4 @@ object Corpus {
     files
       .withColumn("sha256", sha2(col("content"), 256))
       .withColumn("len", octet_length(col("content")))
-
-  /** Map the driver's documents.parquet into the corpus shape (used by the
-    * SparkEntry driver-contract queries so DuckDB can mirror it). */
-  def fromDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    withDerived(docs.select(
-      col("doc_id").as("id"),
-      col("source").as("repo"),
-      concat(lit("doc/"), col("doc_id").cast("string")).as("path"),
-      sha2(col("text"), 256).substr(1, 16).as("commit"),
-      col("lang"),
-      col("text").as("content")))
-  }
 }

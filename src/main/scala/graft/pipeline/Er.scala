@@ -9,20 +9,17 @@ import scala.collection.mutable
 
 /** ER pipeline configuration (the Spark re-expression of the reference's
   * CLI surface, /root/reference/src/aligner.cu:75-139: band generalizes the
-  * fixed max_distance 64; LSH knobs replace the positional pairing). */
+  * fixed max_distance 64; MinHash-LSH blocking replaces the positional
+  * pairing, with the fixed shape of [[Er.blocks]]). */
 final case class ErConfig(
-    band: Int = 64,          // WFA band; distances >= band saturate
-    tau: Int = 63,           // match threshold: edge iff distance <= tau (< band)
-    shingleK: Int = 5,       // char-shingle length for MinHash
-    numHashes: Int = 63,     // MinHash signature length
-    lshBands: Int = 21,      // bands (r = numHashes/lshBands rows per band)
-    saltedMaxBlockSize: Int = 64, // pairing cap: blocks beyond it are dropped
-                             // as boilerplate (pair work grows as
-                             // sum(blockSize^2)); also bounds the
-                             // per-block member buffer
-    seed: Long = 42L) {
+    band: Int = 64,              // WFA band; distances >= band saturate
+    tau: Int = 63,               // match threshold: edge iff distance <= tau (< band)
+    saltedMaxBlockSize: Int = 64 // pairing cap: blocks beyond it are dropped
+                                 // as boilerplate (pair work grows as
+                                 // sum(blockSize^2)); also bounds the
+                                 // per-block member buffer
+) {
   require(tau < band, s"tau ($tau) must be < band ($band)")
-  require(numHashes % lshBands == 0, "numHashes must be divisible by lshBands")
 }
 
 /** Blocking -> candidate pairs -> WFA scoring -> transitive clustering.
@@ -35,24 +32,29 @@ object Er {
 
   // ---------------------------------------------------------------- blocking
 
+  /** MinHash-LSH shape of [[blocks]]: 5-char shingles, 63 hashes in 21
+    * bands of 3 rows, seed 42. er08's DuckHash oracle pins these values;
+    * the two must change together. */
+  private val ShingleK = 5
+  private val NumHashes = 63
+  private val LshBands = 21
+  private val LshSeed = 42L
+
   /** LSH blocks: (id, len, lang, band, bhash). One row per (doc, LSH band).
     * MinHash over char k-shingles; docs sharing any (lang, band, bhash) key
     * become candidates. Implemented as a typed flatMap: one signature pass
     * per doc (cheaper and clearer than exploding shingles to rows, which
-    * would shuffle |doc|*|shingles| rows at 100 TB).
+    * would shuffle |doc|*|shingles| rows at 100 TB). The shape is the
+    * fixed one above; no `cfg` field changes it.
     */
   def blocks(corpus: DataFrame, cfg: ErConfig): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val k = cfg.shingleK
-    val nh = cfg.numHashes
-    val nb = cfg.lshBands
-    val seed = cfg.seed
     corpus.select($"id".as[Long], $"lang".as[String],
         $"content".cast("binary").as[Array[Byte]])
       .flatMap { case (id, lang, bytes) =>
-        val sig = Hashing.minHashSignature(bytes, k, nh, seed)
-        val bands = Hashing.bandHashes(sig, nb)
+        val sig = Hashing.minHashSignature(bytes, ShingleK, NumHashes, LshSeed)
+        val bands = Hashing.bandHashes(sig, LshBands)
         val len = bytes.length
         Iterator.tabulate(bands.length)(b => (id, len, lang, b, bands(b)))
       }
@@ -104,10 +106,8 @@ object Er {
     * ErRunner observes these on the pairs write, [[blockingLineage]]
     * aggregates them on their own. */
   private[graft] def blockingPolicy(cfg: ErConfig): Seq[Column] = {
-    val over = col("n") > cfg.saltedMaxBlockSize
-    Seq(
-      coalesce(sum(when(over, 1L).otherwise(0L)), lit(0L)).as("n_blocks_dropped"),
-      coalesce(sum(when(over, col("n")).otherwise(0L)), lit(0L)).as("n_rows_dropped"),
+    val (blocks, rows) = Buckets.overCap(col("n"), cfg.saltedMaxBlockSize)
+    Seq(blocks.as("n_blocks_dropped"), rows.as("n_rows_dropped"),
       coalesce(max("n"), lit(0L)).as("max_block_size"))
   }
 
@@ -365,14 +365,14 @@ object Er {
     *
     * Blocking is the er03 contract family's (lang, 64-wide length
     * bucket) scheme adapted to the CROSS shape: the SMALL batch side
-    * explodes into buckets {b-1, b, b+1} while every snapshot doc stays
-    * in its single home bucket, so any pair with |lenA - lenB| < 64
-    * meets in exactly ONE bucket (no pair dedup needed, unlike the
-    * self-join) and the big side is never replicated. Snapshot buckets
-    * with more than `bucketCap` docs are dropped — the [[graft.ops.Buckets]]
-    * policy: one hot boilerplate block must not turn the ingest
-    * quadratic. The |len diff| < 64 filter is sound, not just a
-    * heuristic: WFA distance >= |len diff| and tau < 64.
+    * explodes into buckets b-r..b+r, r = ceil(tau/64) ({b-1, b, b+1} at
+    * tau < 64), while every snapshot doc stays in its single home bucket,
+    * so any pair with |lenA - lenB| <= tau meets in exactly ONE bucket
+    * (no pair dedup needed, unlike the self-join) and the big side is
+    * never replicated. Snapshot buckets with more than `bucketCap` docs
+    * are dropped — the [[graft.ops.Buckets]] policy: one hot boilerplate
+    * block must not turn the ingest quadratic. The |len diff| <= tau
+    * filter is sound, not just a heuristic: WFA distance >= |len diff|.
     *
     * [[ingestBuckets]] (the bucket sizes) then [[attachBuckets]] (the
     * cap, the candidates, scoring and the per-doc answer); ErRunner
@@ -398,8 +398,11 @@ object Er {
     * `gsz`. The one aggregation behind both the ingest bucket cap and its
     * dropped-mass lineage; skinny keys only, never content bytes. */
   private[graft] def ingestBuckets(snapshot: DataFrame): DataFrame =
-    snapshot.groupBy(col("lang"), floor(length(col("content")) / 64).as("bucket"))
+    snapshot.groupBy(col("lang"), lenBucket(col("content")).as("bucket"))
       .agg(count(lit(1)).as("gsz"))
+
+  /** A doc's 64-wide length bucket, the ingest blocking key next to lang. */
+  private def lenBucket(content: Column): Column = floor(length(content) / 64)
 
   /** [[assignIncremental]] given the snapshot's [[ingestBuckets]] rows:
     * buckets of at most `bucketCap` docs take part. Each candidate row
@@ -410,18 +413,19 @@ object Er {
   private[graft] def attachBuckets(snapshot: DataFrame, batch: DataFrame, buckets: DataFrame,
                                    cfg: ErConfig, bucketCap: Int): DataFrame = {
     val sn = snapshot.select(col("lang"), col("content").as("content_s"), col("entity"),
-      floor(length(col("content")) / 64).as("bucket"),
+      lenBucket(col("content")).as("bucket"),
       length(col("content")).as("len_s"))
     // eligible snapshot buckets: tiny (lang, bucket) list, AQE-broadcast
     val elig = buckets.where(col("gsz") <= bucketCap).select("lang", "bucket")
+    // |len diff| <= tau spans at most ceil(tau/64) buckets either way
+    val r = math.ceil(cfg.tau / 64.0).toInt
+    val home = lenBucket(col("content"))
     val bt = batch.select(col("id"), col("lang"), col("content"),
       length(col("content")).as("len"),
-      explode(array(floor(length(col("content")) / 64) - 1,
-        floor(length(col("content")) / 64),
-        floor(length(col("content")) / 64) + 1)).as("bucket"))
+      explode(array((-r to r).map(home + _): _*)).as("bucket"))
     val cand = bt.join(elig, Seq("lang", "bucket"))
       .join(sn, Seq("lang", "bucket"))
-      .where(abs(col("len") - col("len_s")) < 64)
+      .where(abs(col("len") - col("len_s")) <= cfg.tau)
     // the candidate join arrives AQE-coalesced to one partition (few
     // bytes, much WFA work): widen it so scoring runs on every core
     val scored = score(cand.select(col("id").as("id_a"), col("entity").as("id_b"),
@@ -444,10 +448,8 @@ object Er {
     * assignment write; [[incrementalDroppedStats]] aggregates them on
     * their own. */
   private[graft] def ingestDroppedPolicy(bucketCap: Int): Seq[Column] = {
-    val over = col("gsz") > bucketCap
-    Seq(
-      count(when(over, 1L)).as("n_buckets_dropped"),
-      coalesce(sum(when(over, col("gsz"))), lit(0L)).as("n_rows_dropped"))
+    val (buckets, rows) = Buckets.overCap(col("gsz"), bucketCap)
+    Seq(buckets.as("n_buckets_dropped"), rows.as("n_rows_dropped"))
   }
 
   /** Lineage for [[assignIncremental]]'s snapshot-bucket cap (the

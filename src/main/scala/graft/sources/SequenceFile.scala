@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Reader/writer for the reference's native input format: records are
+/** Reader for the reference's native input format: records are
   * consecutive line pairs, `>pattern` then `<text`
   * (/root/reference/README.md:58-68; parser
   * utils/sequence_reader.cu:148-189). The reference fails fast on a
@@ -41,15 +40,5 @@ object SequenceFile {
       if (lines.length > 2) malformed(2, s"expected '>', ${got(lines(2))}")
       (i, lines(0).substring(if (i == 0) 1 else 0), lines(1).substring(1))
     }.toDF("pair_id", "pattern", "text")
-  }
-
-  /** Write (pair_id, pattern, text) rows back out in the reference format
-    * (single file, pair order by pair_id — a debug/interop sink). */
-  def write(df: DataFrame, path: String): Unit = {
-    // two output lines per record: explode to one text line per row
-    val lines = df.orderBy("pair_id").select(
-      explode(array(concat(lit(">"), col("pattern")),
-        concat(lit("<"), col("text")))).as("value"))
-    lines.coalesce(1).write.mode(SaveMode.Overwrite).text(path)
   }
 }

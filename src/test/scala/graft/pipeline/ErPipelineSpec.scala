@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.core.Levenshtein
+import graft.core.{Hashing, Levenshtein}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -151,6 +151,40 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
         corpus.select("id", "lang", "content"), cap).head()
       assert(row.getLong(0) == over.size.toLong, s"cap=$cap groups")
       assert(row.getLong(1) == over.values.sum.toLong, s"cap=$cap rows")
+    }
+  }
+
+  test("assignIncremental links a pair whose length gap is past 64 but within tau") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    val base = Seq.fill(300)("ACGT"(rnd.nextInt(4))).mkString
+    val snap = Seq((1L, "go", base, 1L)).toDF("id", "lang", "content", "entity")
+    // appended chars: distance = length gap. 80 is past the 64-wide
+    // bucket but within tau 100 (attach); 101 is past tau (new entity)
+    val batch = Seq((2L, "go", base + "x" * 80), (3L, "go", base + "x" * 101))
+      .toDF("id", "lang", "content")
+    val got = Er.assignIncremental(snap, batch, ErConfig(band = 128, tau = 100))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(got == Seq((2L, 1L, 1L), (3L, 3L, 0L)))
+  }
+
+  test("blocks: 21 rows per doc, the band hashes of its 5-shingle, 63-hash, seed-42 MinHash") {
+    import spark.implicits._
+    val docs = corpus.select("id", "lang", "content").orderBy("id").limit(3).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq :+
+      ((-1L, "go", "abc")) // shorter than a shingle
+    val got = Er.blocks(docs.toDF("id", "lang", "content"), cfg).collect()
+      .groupBy(_.getAs[Long]("id"))
+    assert(got.keySet == docs.map(_._1).toSet)
+    docs.foreach { case (id, lang, content) =>
+      val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val want = Hashing.bandHashes(Hashing.minHashSignature(bytes, 5, 63, 42L), 21)
+      val rows = got(id).sortBy(_.getAs[Int]("band"))
+      assert(rows.map(_.getAs[Int]("band")).toSeq == (0 until 21), s"doc $id")
+      assert(rows.map(_.getAs[Long]("bhash")).toSeq == want.toSeq, s"doc $id")
+      rows.foreach { r =>
+        assert(r.getAs[Int]("len") == bytes.length && r.getAs[String]("lang") == lang)
+      }
     }
   }
 

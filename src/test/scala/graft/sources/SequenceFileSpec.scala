@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.{AlignerCli, SparkTestBase}
 import graft.core.Levenshtein
+import org.apache.spark.SparkException
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,17 +83,6 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     assert(e.getMessage.contains("2 files"), e.getMessage)
   }
 
-  test("write/read roundtrip") {
-    import spark.implicits._
-    val df = Seq((0L, "ACGT", "AC"), (1L, "T", "TTT"))
-      .toDF("pair_id", "pattern", "text")
-    val dir = Files.createTempDirectory("seqout").toString + "/out"
-    SequenceFile.write(df, dir)
-    val back = SequenceFile.read(spark, dir).orderBy("pair_id").collect()
-    assert(back.map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq ==
-      Seq((0L, "ACGT", "AC"), (1L, "T", "TTT")))
-  }
-
   test("AlignerCli runs a sequence file end-to-end with reference semantics") {
     val rnd = new Random(7)
     val pairs = (1 to 50).map { _ =>
@@ -145,12 +135,18 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
 
   test("-l/--seq-len enforces the reference's 2*len slot capacity, fail-fast") {
     val path = writeSeqFile(Seq(("A" * 100, "A" * 99), ("C" * 401, "C" * 400)))
-    // capacity 2*200 = 400: pair 1's 401-byte pattern overflows
-    val err = intercept[IllegalArgumentException] {
+    // capacity 2*200 = 400: pair 1's 401-byte pattern overflows; the task
+    // aligning it fails, so the error arrives as the job's failure
+    val err = intercept[SparkException] {
       AlignerCli.run(spark, AlignerCli.parseArgs(
         Array("-f", path, "-l", "200"))).collect()
     }
-    assert(err.getMessage.contains("pair 1") && err.getMessage.contains("400"))
+    val cause = err.getCause
+    assert(cause.isInstanceOf[IllegalArgumentException], err)
+    assert(cause.getMessage.contains("pair 1") && cause.getMessage.contains("400"), cause)
+    // -n keeps only pair 0, so the over-length pair 1 is never checked
+    assert(AlignerCli.run(spark, AlignerCli.parseArgs(
+      Array("-f", path, "-l", "200", "-n", "1"))).count() == 1)
     // exactly at capacity passes; 0/absent means unbounded
     assert(AlignerCli.run(spark, AlignerCli.parseArgs(
       Array("-f", path, "-l", "201"))).count() == 2)
