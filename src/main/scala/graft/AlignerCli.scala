@@ -39,28 +39,41 @@ object AlignerCli {
                           threads: Int = 0, print: Boolean = false,
                           band: Int = 64)
 
+  private val Usage =
+    "usage: AlignerCli -f|--file <file> [-n|--num-alignments num] [-l|--seq-len len] " +
+      "[-t|--cpu-threads threads] [-d|--max-distance band] [-p|--print-cigars] " +
+      "(-b|--batch-size is accepted and ignored: tasks take the read's partitions)"
+
   /** Accepts the reference's short AND long forms (its generic parser
     * matches either, /root/reference/utils/arg_handler.c:88-138; long
-    * names from the options table, src/aligner.cu:77-136). */
+    * names from the options table, src/aligner.cu:77-136). A missing or
+    * non-numeric value and a band below 1 fail here, naming the option,
+    * rather than later inside a Spark task. */
   def parseArgs(args: Array[String]): Config = {
+    def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$msg; $Usage")
+    def value(i: Int): String =
+      if (i + 1 < args.length) args(i + 1) else fail(s"${args(i)} needs a value")
+    def number[A](i: Int)(parse: String => A): A =
+      try parse(value(i))
+      catch {
+        case _: NumberFormatException => fail(s"${args(i)} needs a number, got '${args(i + 1)}'")
+      }
     var c = Config()
     var i = 0
     while (i < args.length) {
       args(i) match {
-        case "-f" | "--file" => c = c.copy(file = args(i + 1)); i += 2
-        case "-n" | "--num-alignments" => c = c.copy(num = args(i + 1).toLong); i += 2
-        case "-l" | "--seq-len" => c = c.copy(seqLen = args(i + 1).toInt); i += 2
-        case "-b" | "--batch-size" => args(i + 1).toInt; i += 2 // checked, then ignored
-        case "-t" | "--cpu-threads" => c = c.copy(threads = args(i + 1).toInt); i += 2
+        case "-f" | "--file" => c = c.copy(file = value(i)); i += 2
+        case "-n" | "--num-alignments" => c = c.copy(num = number(i)(_.toLong)); i += 2
+        case "-l" | "--seq-len" => c = c.copy(seqLen = number(i)(_.toInt)); i += 2
+        case "-b" | "--batch-size" => number(i)(_.toInt); i += 2 // checked, then ignored
+        case "-t" | "--cpu-threads" => c = c.copy(threads = number(i)(_.toInt)); i += 2
         case "-p" | "--print-cigars" => c = c.copy(print = true); i += 1
-        case "-d" | "--max-distance" => c = c.copy(band = args(i + 1).toInt); i += 2
-        case other => throw new IllegalArgumentException(s"unknown option $other")
+        case "-d" | "--max-distance" => c = c.copy(band = number(i)(_.toInt)); i += 2
+        case other => fail(s"unknown option $other")
       }
     }
-    require(c.file.nonEmpty,
-      "usage: AlignerCli -f|--file <file> [-n|--num-alignments num] [-l|--seq-len len] " +
-        "[-t|--cpu-threads threads] [-d|--max-distance band] [-p|--print-cigars] " +
-        "(-b|--batch-size is accepted and ignored: tasks take the read's partitions)")
+    if (c.file.isEmpty) fail("-f|--file is required")
+    if (c.band < 1) fail(s"-d|--max-distance must be at least 1, got ${c.band}")
     c
   }
 

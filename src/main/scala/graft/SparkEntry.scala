@@ -3,7 +3,9 @@ package graft
 import graft.core.{Wfa, WfaWorkspace}
 import graft.oracle.DuckHash
 import graft.ops.{AsOf, Cdc, Dedup, KMeans, Multimodal, Pq, RangeJoin, Sampling, Search, Similarity, TextAnalysis}
-import graft.pipeline.{Corpus, Er, ErConfig}
+import graft.pipeline.{Er, ErConfig, ErRunner}
+import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -105,7 +107,7 @@ object SparkEntry {
   /** ER input with deterministically planted near-duplicates: every 5th
     * document gets a copy with the last 7 chars dropped (distance 7 — a
     * guaranteed match at tau=63). Identical CTE on the DuckDB side. */
-  private def erInput(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def erInput(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val originals = docs.select(
       col("doc_id").as("id"), col("lang"), col("text").as("content"))
@@ -320,19 +322,23 @@ object SparkEntry {
 
   // ------------------------------------------------------------------ entry
 
-  /** Flagship: the full ER pipeline (MinHash-LSH blocking -> salted
-    * candidate join -> banded WFA scoring -> large-star/small-star
-    * clustering) on sf0.001, returning non-singleton entities. */
+  /** Flagship: the full ER pipeline ([[graft.pipeline.ErRunner.run]]:
+    * MinHash-LSH blocking -> candidate pairs -> banded WFA scoring ->
+    * connected-components clustering) on sf0.001, returning the
+    * non-singleton entities as (entity, members) ordered by entity. The
+    * run checkpoints into a temporary work directory that is deleted
+    * before returning, so the rows are collected first. */
   def entry(spark: SparkSession): DataFrame = {
-    val corpus = Corpus.withDerived(
-      erInput(spark, "/root/testdata/sf0.001")
-        .withColumn("repo", lit("testdata"))
-        .withColumn("path", concat(lit("doc/"), col("id")))
-        .withColumn("commit", lit("0")))
-    val entities = Er.run(corpus, ErConfig())
-    entities.groupBy("entity").agg(count(lit(1)).as("members"))
-      .where(col("members") >= 2)
-      .orderBy(col("entity"))
+    val dir = Files.createTempDirectory("graft-entry").toString
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val clusters = ErRunner.run(spark, dir, ErConfig())(erInput(spark, "/root/testdata/sf0.001"))
+        .read("entities")
+        .groupBy("entity").agg(count(lit(1)).as("members"))
+        .where(col("members") >= 2)
+        .orderBy(col("entity"))
+      spark.createDataFrame(java.util.Arrays.asList(clusters.collect(): _*), clusters.schema)
+    } finally fs.delete(new Path(dir), true)
   }
 
   // ---------------------------------------------------------------- queries
@@ -439,9 +445,9 @@ object SparkEntry {
           col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz"))
       val l = table(s, dir, "lineitem")
       // round 6: a shuffled-hash hint on the orders side was tried and
-      // measured NO better than sort-merge here (BenchExtra 0.82 -> 1.12 s,
-      // bench reps agree) — the sorts on these int keys are not the cost;
-      // reverted per guide §1 (measure, keep only wins)
+      // measured NO better than sort-merge here (0.82 -> 1.12 s in an
+      // isolated timing, bench reps agree) — the sorts on these int keys
+      // are not the cost; reverted per guide §1 (measure, keep only wins)
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .join(broadcast(su),

@@ -1,113 +1,13 @@
 package graft.expr
 
-import graft.core.{Wfa, WfaWorkspace}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
-
-/** Runtime entry points for codegen'd WFA expressions. A per-thread
-  * workspace cache keeps the "no per-pair object churn" property inside
-  * whole-stage codegen (one workspace per (thread, band), reused across
-  * rows). */
-object WfaEval {
-  private val tlDist = new ThreadLocal[java.util.HashMap[Integer, WfaWorkspace]] {
-    override def initialValue() = new java.util.HashMap[Integer, WfaWorkspace]()
-  }
-  private val tlCigar = new ThreadLocal[java.util.HashMap[Integer, WfaWorkspace]] {
-    override def initialValue() = new java.util.HashMap[Integer, WfaWorkspace]()
-  }
-
-  private def ws(band: Int, withCigar: Boolean): WfaWorkspace = {
-    val m = if (withCigar) tlCigar.get() else tlDist.get()
-    var w = m.get(band)
-    if (w == null) { w = new WfaWorkspace(band, withCigar); m.put(band, w) }
-    w
-  }
-
-  /** Exact banded edit distance; returns `band` when saturated (>= band). */
-  def distance(pattern: org.apache.spark.unsafe.types.UTF8String,
-               text: org.apache.spark.unsafe.types.UTF8String, band: Int): Int =
-    Wfa.align(pattern.getBytes, text.getBytes, ws(band, withCigar = false)).distance
-
-  /** Run-length CIGAR, or null when the band saturates. */
-  def cigar(pattern: org.apache.spark.unsafe.types.UTF8String,
-            text: org.apache.spark.unsafe.types.UTF8String,
-            band: Int): org.apache.spark.unsafe.types.UTF8String = {
-    val r = Wfa.align(pattern.getBytes, text.getBytes, ws(band, withCigar = true))
-    if (r.cigar == null) null
-    else org.apache.spark.unsafe.types.UTF8String.fromString(r.cigar)
-  }
-}
-
-/** `wfa_distance(pattern, text, band)`: exact unit-cost edit distance via
-  * banded WFA, saturating at `band` (the SQL surface of the core scorer;
-  * semantics of /root/reference/src/kernels.cu:182-310). Codegen-friendly:
-  * generates a static call, staying inside whole-stage codegen. */
-case class WfaDistance(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "wfa_distance"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = first.dataType == StringType && second.dataType == StringType &&
-      third.dataType == IntegerType
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string, int), got " +
-        Seq(first, second, third).map(_.dataType.simpleString).mkString(", "))
-  }
-
-  override protected def nullSafeEval(p: Any, t: Any, b: Any): Any =
-    WfaEval.distance(p.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], b.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, t, b) => s"graft.expr.WfaEval.distance($p, $t, $b)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** `wfa_cigar(pattern, text, band)`: run-length CIGAR (M/X/I/D) of the WFA
-  * alignment; NULL when the band saturates. */
-case class WfaCigar(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "wfa_cigar"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = first.dataType == StringType && second.dataType == StringType &&
-      third.dataType == IntegerType
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (string, string, int), got " +
-        Seq(first, second, third).map(_.dataType.simpleString).mkString(", "))
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val p = first.eval(input)
-    val t = second.eval(input)
-    val b = third.eval(input)
-    if (p == null || t == null || b == null) null
-    else WfaEval.cigar(p.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], b.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, t, b) => s"""
-      ${ev.value} = graft.expr.WfaEval.cigar($p, $t, $b);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
 
 /** `splitmix64(x)`: the engine's canonical 64-bit mixer
   * ([[graft.core.Hashing.splitmix64]], Steele et al. OOPSLA'14) as a
@@ -276,12 +176,6 @@ case class CosineSim(left: Expression, right: Expression)
   * (resolved through the function registry at analysis time, keeping this
   * file on public Spark API only). */
 object functions {
-  def wfa_distance(pattern: Column, text: Column, band: Column): Column =
-    call_function("wfa_distance", pattern, text, band)
-
-  def wfa_cigar(pattern: Column, text: Column, band: Column): Column =
-    call_function("wfa_cigar", pattern, text, band)
-
   def splitmix64(x: Column): Column = call_function("splitmix64", x)
 
   def cosine_sim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
@@ -292,8 +186,10 @@ object functions {
     call_function("vocab_tokens", text, vocabCsv)
 }
 
-/** SparkSessionExtensions hook: registers wfa_distance / wfa_cigar for SQL
-  * and the Column API. Use
+/** SparkSessionExtensions hook: registers the functions the contract
+  * queries call — `splitmix64` (sampling), `cosine_sim` (similarity),
+  * `l2sq_int` (k-means) and `vocab_tokens` (text analysis) — for SQL and
+  * the Column API. Use
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.expr.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -311,16 +207,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("wfa_distance"),
-      new ExpressionInfo("graft.expr.WfaDistance", "wfa_distance"),
-      (children: Seq[Expression]) => {
-        val c = arity("wfa_distance", 3, children); WfaDistance(c(0), c(1), c(2)) }))
-    e.injectFunction((
-      new FunctionIdentifier("wfa_cigar"),
-      new ExpressionInfo("graft.expr.WfaCigar", "wfa_cigar"),
-      (children: Seq[Expression]) => {
-        val c = arity("wfa_cigar", 3, children); WfaCigar(c(0), c(1), c(2)) }))
     e.injectFunction((
       new FunctionIdentifier("splitmix64"),
       new ExpressionInfo("graft.expr.Splitmix64", "splitmix64"),
@@ -341,8 +227,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft.expr.VocabTokens", "vocab_tokens"),
       (children: Seq[Expression]) => {
         val c = arity("vocab_tokens", 2, children); VocabTokens(c(0), c(1)) }))
-    // wfa_distance(p,t,band) <= tau  ==>  prepend the implied cheap
-    // length-gap predicate (short-circuits the expensive WFA call)
-    e.injectOptimizerRule(_ => WfaLengthPrefilter)
   }
 }

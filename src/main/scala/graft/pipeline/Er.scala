@@ -180,7 +180,7 @@ object Er {
     * passed through untouched: they only label the pair, and
     * [[attachBuckets]] passes a snapshot entity as `id_b`. Width is set by
     * the code that builds the rows: [[withContents]] widens the skinny
-    * pairs in its broadcast branch, [[assignIncremental]] repartitions its
+    * pairs in its broadcast branch, [[attachBuckets]] repartitions its
     * candidates.
     */
   def score(pairsWithContents: DataFrame, cfg: ErConfig): DataFrame = {
@@ -461,17 +461,5 @@ object Er {
   def incrementalDroppedStats(snapshot: DataFrame, bucketCap: Int): DataFrame = {
     val policy = ingestDroppedPolicy(bucketCap)
     ingestBuckets(snapshot).agg(policy.head, policy.tail: _*)
-  }
-
-  // ------------------------------------------------------------ full pipeline
-
-  /** End-to-end, uncheckpointed (testing / small inputs). Returns
-    * (id, entity). */
-  def run(corpus: DataFrame, cfg: ErConfig): DataFrame = {
-    val b = blocks(corpus, cfg)
-    val pairs = candidatePairs(b, cfg)
-    val scored = score(withContents(pairs, corpus), cfg)
-    val comps = connectedComponents(edges(scored, cfg))
-    entities(corpus, comps)
   }
 }

@@ -63,8 +63,9 @@ object ErRunner {
     * [[Er.assignIncremental]], with the same resume semantics as [[run]]
     * (a killed ingest resumes at the assignment checkpoint instead of
     * re-scoring the batch). Each crawl gets its own `ingest/<tag>/`
-    * stage directory, so successive crawls never clobber each other and
-    * `entities_merged` of one tag can seed the next.
+    * stage directory, so successive crawls never clobber each other. Every
+    * crawl attaches to the full run's `entities`; no API seeds a crawl
+    * from an earlier crawl's `entities_merged`.
     *
     * Three checkpoint writes (`batch`, `assigned`, `entities_merged`)
     * are the whole Spark cost of a crawl. The snapshot is read with the

@@ -103,42 +103,45 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
 
   test("assignIncremental: matches a driver-side reference; near-dups attach, novel docs self") {
     import spark.implicits._
-    val snap = corpus.select("id", "lang", "content")
-      .join(Er.run(corpus, cfg), "id")
-    val snapLocal = snap.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    // batch: every 10th snapshot doc minus its last 4 chars (distance 4
-    // -> must attach) + novel z-docs far from everything (-> self)
-    val nearLocal = snapLocal.filter(_._1 % 10 == 0).map { case (id, lang, c, _) =>
-      (id + 10000000L, lang, c.dropRight(4)) }
-    val novelLocal = (0 until 7).map(i =>
-      (90000000L + i, snapLocal(i % snapLocal.length)._2, "z" * 400 + i))
-    val batchLocal = nearLocal.toSeq ++ novelLocal
-    val got = Er.assignIncremental(snap,
-        batchLocal.toDF("id", "lang", "content"), cfg, bucketCap = 256)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // independent reference: same blocking contract, DP distances
-    val buckets = snapLocal.groupBy(s => (s._2, s._3.length / 64))
-    val okB = buckets.filter(_._2.length <= 256).keySet
-    // ground-truth sanity: no hot bucket, so the attach assertions below hold
-    assert(buckets.values.map(_.length).max <= 256, "test corpus grew a hot bucket")
-    val exp = batchLocal.map { case (id, lang, c) =>
-      val b = c.length / 64
-      val cands = (b - 1 to b + 1).flatMap(bb =>
-        if (okB((lang, bb))) buckets((lang, bb)) else Array.empty[(Long, String, String, Long)])
-        .filter(s => math.abs(s._3.length - c.length) < 64)
-      val ms = cands.filter(s => Levenshtein.distance(c, s._3) <= cfg.tau)
-      if (ms.isEmpty) id -> (id, 0L) else id -> (ms.map(_._4).min, ms.size.toLong)
-    }.toMap
-    assert(got == exp)
-    // semantics: every near-dup attached to its original's entity
-    val entOf = snapLocal.map(s => s._1 -> s._4).toMap
-    nearLocal.foreach { case (bid, _, _) =>
-      assert(got(bid)._1 == entOf(bid - 10000000L), s"near-dup $bid")
-      assert(got(bid)._2 >= 1L)
+    withWorkDir("er-assign") { dir =>
+      val entities = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+        .read("entities")
+      val snap = corpus.select("id", "lang", "content").join(entities, "id")
+      val snapLocal = snap.collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+      // batch: every 10th snapshot doc minus its last 4 chars (distance 4
+      // -> must attach) + novel z-docs far from everything (-> self)
+      val nearLocal = snapLocal.filter(_._1 % 10 == 0).map { case (id, lang, c, _) =>
+        (id + 10000000L, lang, c.dropRight(4)) }
+      val novelLocal = (0 until 7).map(i =>
+        (90000000L + i, snapLocal(i % snapLocal.length)._2, "z" * 400 + i))
+      val batchLocal = nearLocal.toSeq ++ novelLocal
+      val got = Er.assignIncremental(snap,
+          batchLocal.toDF("id", "lang", "content"), cfg, bucketCap = 256)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      // independent reference: same blocking contract, DP distances
+      val buckets = snapLocal.groupBy(s => (s._2, s._3.length / 64))
+      val okB = buckets.filter(_._2.length <= 256).keySet
+      // ground-truth sanity: no hot bucket, so the attach assertions below hold
+      assert(buckets.values.map(_.length).max <= 256, "test corpus grew a hot bucket")
+      val exp = batchLocal.map { case (id, lang, c) =>
+        val b = c.length / 64
+        val cands = (b - 1 to b + 1).flatMap(bb =>
+          if (okB((lang, bb))) buckets((lang, bb)) else Array.empty[(Long, String, String, Long)])
+          .filter(s => math.abs(s._3.length - c.length) < 64)
+        val ms = cands.filter(s => Levenshtein.distance(c, s._3) <= cfg.tau)
+        if (ms.isEmpty) id -> (id, 0L) else id -> (ms.map(_._4).min, ms.size.toLong)
+      }.toMap
+      assert(got == exp)
+      // semantics: every near-dup attached to its original's entity
+      val entOf = snapLocal.map(s => s._1 -> s._4).toMap
+      nearLocal.foreach { case (bid, _, _) =>
+        assert(got(bid)._1 == entOf(bid - 10000000L), s"near-dup $bid")
+        assert(got(bid)._2 >= 1L)
+      }
+      // every novel doc opened its own entity
+      novelLocal.foreach { case (bid, _, _) => assert(got(bid) == (bid, 0L)) }
     }
-    // every novel doc opened its own entity
-    novelLocal.foreach { case (bid, _, _) => assert(got(bid) == (bid, 0L)) }
   }
 
   test("incrementalDroppedStats counts exactly the over-cap (lang, bucket) groups") {
@@ -275,19 +278,22 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("entities: transitive clustering groups duplicates; sha256 invariant holds") {
-    val entities = Er.run(corpus, cfg)
-    assert(entities.count() == corpus.count())
-    // sha256 multiset is preserved end-to-end (join back on id)
-    val joined = corpus.join(entities, "id")
-    assert(joined.count() == corpus.count())
-    val shaIn = corpus.agg(sum(crc32(col("sha256")))).head().getLong(0)
-    val shaOut = joined.agg(sum(crc32(col("sha256")))).head().getLong(0)
-    assert(shaIn == shaOut)
-    // every true pair ends in the same entity (transitivity may merge more)
-    val ent = entities.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val violations = truePairs.filterNot { case (a, b) => ent(a) == ent(b) }
-    assert(violations.size <= math.max(1, truePairs.size / 100),
-      s"${violations.size}/${truePairs.size} true pairs split across entities")
+    withWorkDir("er-entities") { dir =>
+      val entities = ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+        .read("entities")
+      assert(entities.count() == corpus.count())
+      // sha256 multiset is preserved end-to-end (join back on id)
+      val joined = corpus.join(entities, "id")
+      assert(joined.count() == corpus.count())
+      val shaIn = corpus.agg(sum(crc32(col("sha256")))).head().getLong(0)
+      val shaOut = joined.agg(sum(crc32(col("sha256")))).head().getLong(0)
+      assert(shaIn == shaOut)
+      // every true pair ends in the same entity (transitivity may merge more)
+      val ent = entities.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val violations = truePairs.filterNot { case (a, b) => ent(a) == ent(b) }
+      assert(violations.size <= math.max(1, truePairs.size / 100),
+        s"${violations.size}/${truePairs.size} true pairs split across entities")
+    }
   }
 
   test("salted triangle join finds exactly the pairs a direct self-join would") {
@@ -372,18 +378,6 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(key, on)
     try body finally spark.conf.unset(key)
-  }
-
-  /** Runs `body` on a fresh `java.io.tmpdir` directory named `prefix…`,
-    * deleting the whole tree afterwards, pass or fail. */
-  private def withWorkDir[T](prefix: String)(body: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir.toString) finally {
-      val tree = java.nio.file.Files.walk(dir)
-      try tree.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally tree.close()
-    }
   }
 
   /** Spark jobs started while `body` runs on this thread, told apart by

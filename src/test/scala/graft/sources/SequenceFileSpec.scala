@@ -9,29 +9,30 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.util.Random
 
-/** Reference-format I/O (S1), 2-bit packing parity (S3/S4), and the CLI
-  * surface (S14/E1). */
+/** Reference-format I/O (S1) and the CLI surface (S14/E1). Every file a
+  * test writes lives in a [[withWorkDir]] directory, deleted afterwards. */
 class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     with AdaptiveSparkPlanHelper {
 
-  private def writeSeqFile(pairs: Seq[(String, String)]): String = {
-    val f = Files.createTempFile("seqs", ".txt")
+  private def writeSeqFile(dir: String, pairs: Seq[(String, String)]): String = {
+    val f = Paths.get(dir, "seqs.txt")
     val content = pairs.map { case (p, t) => s">$p\n<$t" }.mkString("", "\n", "\n")
     Files.writeString(f, content)
     f.toString
   }
 
   test("read parses >/< line pairs positionally") {
-    val path = writeSeqFile(Seq(("ACGT", "ACTT"), ("GG", "GGG"), ("", "A")))
-    val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
-    assert(rows.length == 3)
-    assert(rows(0).getString(1) == "ACGT" && rows(0).getString(2) == "ACTT")
-    assert(rows(2).getString(1) == "" && rows(2).getString(2) == "A")
+    withWorkDir("seqs") { dir =>
+      val path = writeSeqFile(dir, Seq(("ACGT", "ACTT"), ("GG", "GGG"), ("", "A")))
+      val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
+      assert(rows.length == 3)
+      assert(rows(0).getString(1) == "ACGT" && rows(0).getString(2) == "ACTT")
+      assert(rows(2).getString(1) == "" && rows(2).getString(2) == "A")
+    }
   }
 
-  private def assertMalformed(content: String): Unit = {
-    val f = Files.createTempFile("bad", ".txt")
-    Files.writeString(f, content)
+  private def assertMalformed(content: String): Unit = withWorkDir("bad") { dir =>
+    val f = Files.writeString(Paths.get(dir, "bad.txt"), content)
     val e = intercept[Exception] {
       SequenceFile.read(spark, f.toString).collect()
     }
@@ -52,105 +53,128 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
   }
 
   test("read returns the same pairs at every split size") {
-    val pairs = Seq(("ACGT", "ACTT"), ("", "GG"), ("T", ""), ("GATTACA", "GATACA"), ("C", "C"))
-    val lf = writeSeqFile(pairs)
-    val crlf = Files.createTempFile("seqs-crlf", ".txt")
-    Files.writeString(crlf, Files.readString(Paths.get(lf)).replace("\n", "\r\n"))
-    val expected = pairs.zipWithIndex.map { case ((p, t), i) => (i.toLong, p, t) }
-    try {
-      for (path <- Seq(lf, crlf.toString)) {
-        val len = Files.size(Paths.get(path))
-        // every split edge position is hit, including between '\n' and '>'
-        for (split <- 1L to len) {
-          spark.conf.set("spark.sql.files.maxPartitionBytes", split)
-          val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
-            .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-          assert(rows == expected, s"$path at $split-byte splits")
+    withWorkDir("seqs") { dir =>
+      val pairs = Seq(("ACGT", "ACTT"), ("", "GG"), ("T", ""), ("GATTACA", "GATACA"), ("C", "C"))
+      val lf = writeSeqFile(dir, pairs)
+      val crlf = Paths.get(dir, "seqs-crlf.txt")
+      Files.writeString(crlf, Files.readString(Paths.get(lf)).replace("\n", "\r\n"))
+      val expected = pairs.zipWithIndex.map { case ((p, t), i) => (i.toLong, p, t) }
+      try {
+        for (path <- Seq(lf, crlf.toString)) {
+          val len = Files.size(Paths.get(path))
+          // every split edge position is hit, including between '\n' and '>'
+          for (split <- 1L to len) {
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+            val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
+              .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+            assert(rows == expected, s"$path at $split-byte splits")
+          }
         }
-      }
-    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
   }
 
   test("read refuses a directory of several files (split order is not file order)") {
-    val dir = Files.createTempDirectory("seqparts")
-    // Spark orders splits by size: the larger part-00001 would come first
-    // and take pair ids 0-2
-    Files.writeString(dir.resolve("part-00000"), ">A\n<A\n>C\n<C\n")
-    Files.writeString(dir.resolve("part-00001"), ">GGGG\n<GGGG\n>TTTT\n<TTTT\n>ACGT\n<ACGT\n")
-    val e = intercept[IllegalArgumentException] {
-      SequenceFile.read(spark, dir.toString).collect()
+    withWorkDir("seqparts") { dir =>
+      // Spark orders splits by size: the larger part-00001 would come first
+      // and take pair ids 0-2
+      Files.writeString(Paths.get(dir, "part-00000"), ">A\n<A\n>C\n<C\n")
+      Files.writeString(Paths.get(dir, "part-00001"), ">GGGG\n<GGGG\n>TTTT\n<TTTT\n>ACGT\n<ACGT\n")
+      val e = intercept[IllegalArgumentException] {
+        SequenceFile.read(spark, dir).collect()
+      }
+      assert(e.getMessage.contains("2 files"), e.getMessage)
     }
-    assert(e.getMessage.contains("2 files"), e.getMessage)
   }
 
   test("AlignerCli runs a sequence file end-to-end with reference semantics") {
-    val rnd = new Random(7)
-    val pairs = (1 to 50).map { _ =>
-      val p = (0 until 50 + rnd.nextInt(100)).map(_ => "ACGT"(rnd.nextInt(4))).mkString
-      val t = if (rnd.nextBoolean()) {
-        val sb = new StringBuilder(p)
-        for (_ <- 0 until rnd.nextInt(10) if sb.nonEmpty)
-          sb.setCharAt(rnd.nextInt(sb.length), "ACGT"(rnd.nextInt(4)))
-        sb.toString
-      } else (0 until 50).map(_ => "ACGT"(rnd.nextInt(4))).mkString
-      (p, t)
-    }
-    val path = writeSeqFile(pairs)
-    val cfg = AlignerCli.parseArgs(Array("-f", path, "-b", "16", "-d", "64", "-p"))
-    assert(cfg.file == path && cfg.print)
-    // -b is accepted for parity and changes nothing
-    assert(cfg == AlignerCli.parseArgs(Array("-f", path, "-d", "64", "-p")))
-    val out = AlignerCli.run(spark, cfg).orderBy("pair_id").collect()
-    assert(out.length == 50)
-    out.foreach { r =>
-      val (p, t) = pairs(r.getLong(0).toInt)
-      val ref = Levenshtein.distance(p, t)
-      if (ref < 64) {
-        assert(r.getInt(1) == ref)
-        assert(graft.core.CigarOps.replay(p, t, r.getString(3)))
-      } else assert(r.getBoolean(2))
-    }
-    // -n limits the number of alignments
-    val limited = AlignerCli.run(spark,
-      AlignerCli.parseArgs(Array("-f", path, "-n", "10"))).count()
-    assert(limited == 10)
+    withWorkDir("seqs") { dir =>
+      val rnd = new Random(7)
+      val pairs = (1 to 50).map { _ =>
+        val p = (0 until 50 + rnd.nextInt(100)).map(_ => "ACGT"(rnd.nextInt(4))).mkString
+        val t = if (rnd.nextBoolean()) {
+          val sb = new StringBuilder(p)
+          for (_ <- 0 until rnd.nextInt(10) if sb.nonEmpty)
+            sb.setCharAt(rnd.nextInt(sb.length), "ACGT"(rnd.nextInt(4)))
+          sb.toString
+        } else (0 until 50).map(_ => "ACGT"(rnd.nextInt(4))).mkString
+        (p, t)
+      }
+      val path = writeSeqFile(dir, pairs)
+      val cfg = AlignerCli.parseArgs(Array("-f", path, "-b", "16", "-d", "64", "-p"))
+      assert(cfg.file == path && cfg.print)
+      // -b is accepted for parity and changes nothing
+      assert(cfg == AlignerCli.parseArgs(Array("-f", path, "-d", "64", "-p")))
+      val out = AlignerCli.run(spark, cfg).orderBy("pair_id").collect()
+      assert(out.length == 50)
+      out.foreach { r =>
+        val (p, t) = pairs(r.getLong(0).toInt)
+        val ref = Levenshtein.distance(p, t)
+        if (ref < 64) {
+          assert(r.getInt(1) == ref)
+          assert(graft.core.CigarOps.replay(p, t, r.getString(3)))
+        } else assert(r.getBoolean(2))
+      }
+      // -n limits the number of alignments
+      val limited = AlignerCli.run(spark,
+        AlignerCli.parseArgs(Array("-f", path, "-n", "10"))).count()
+      assert(limited == 10)
 
-    // long forms parse identically to the reference's arg_handler
-    val long = AlignerCli.parseArgs(Array(
-      "--file", path, "--num-alignments", "10", "--seq-len", "200",
-      "--batch-size", "16", "--cpu-threads", "4", "--max-distance", "32",
-      "--print-cigars"))
-    assert(long == AlignerCli.Config(path, 10, 200, 4, print = true, band = 32))
+      // long forms parse identically to the reference's arg_handler
+      val long = AlignerCli.parseArgs(Array(
+        "--file", path, "--num-alignments", "10", "--seq-len", "200",
+        "--batch-size", "16", "--cpu-threads", "4", "--max-distance", "32",
+        "--print-cigars"))
+      assert(long == AlignerCli.Config(path, 10, 200, 4, print = true, band = 32))
+    }
   }
 
   test("AlignerCli.run reads and aligns without a shuffle") {
-    val path = writeSeqFile((1 to 40).map(i => ("ACGT" * i, "ACGA" * i)))
-    val out = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path, "-b", "4")))
-    assert(out.collect().length == 40)
-    // the final AQE plan, read after the action: each task scores the
-    // pairs of one file split, so no exchange is planned
-    val plan = out.queryExecution.executedPlan
-    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    withWorkDir("seqs") { dir =>
+      val path = writeSeqFile(dir, (1 to 40).map(i => ("ACGT" * i, "ACGA" * i)))
+      val out = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path, "-b", "4")))
+      assert(out.collect().length == 40)
+      // the final AQE plan, read after the action: each task scores the
+      // pairs of one file split, so no exchange is planned
+      val plan = out.queryExecution.executedPlan
+      assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    }
   }
 
   test("-l/--seq-len enforces the reference's 2*len slot capacity, fail-fast") {
-    val path = writeSeqFile(Seq(("A" * 100, "A" * 99), ("C" * 401, "C" * 400)))
-    // capacity 2*200 = 400: pair 1's 401-byte pattern overflows; the task
-    // aligning it fails, so the error arrives as the job's failure
-    val err = intercept[SparkException] {
-      AlignerCli.run(spark, AlignerCli.parseArgs(
-        Array("-f", path, "-l", "200"))).collect()
+    withWorkDir("seqs") { dir =>
+      val path = writeSeqFile(dir, Seq(("A" * 100, "A" * 99), ("C" * 401, "C" * 400)))
+      // capacity 2*200 = 400: pair 1's 401-byte pattern overflows; the task
+      // aligning it fails, so the error arrives as the job's failure
+      val err = intercept[SparkException] {
+        AlignerCli.run(spark, AlignerCli.parseArgs(
+          Array("-f", path, "-l", "200"))).collect()
+      }
+      val cause = err.getCause
+      assert(cause.isInstanceOf[IllegalArgumentException], err)
+      assert(cause.getMessage.contains("pair 1") && cause.getMessage.contains("400"), cause)
+      // -n keeps only pair 0, so the over-length pair 1 is never checked
+      assert(AlignerCli.run(spark, AlignerCli.parseArgs(
+        Array("-f", path, "-l", "200", "-n", "1"))).count() == 1)
+      // exactly at capacity passes; 0/absent means unbounded
+      assert(AlignerCli.run(spark, AlignerCli.parseArgs(
+        Array("-f", path, "-l", "201"))).count() == 2)
+      assert(AlignerCli.run(spark, AlignerCli.parseArgs(
+        Array("-f", path))).count() == 2)
     }
-    val cause = err.getCause
-    assert(cause.isInstanceOf[IllegalArgumentException], err)
-    assert(cause.getMessage.contains("pair 1") && cause.getMessage.contains("400"), cause)
-    // -n keeps only pair 0, so the over-length pair 1 is never checked
-    assert(AlignerCli.run(spark, AlignerCli.parseArgs(
-      Array("-f", path, "-l", "200", "-n", "1"))).count() == 1)
-    // exactly at capacity passes; 0/absent means unbounded
-    assert(AlignerCli.run(spark, AlignerCli.parseArgs(
-      Array("-f", path, "-l", "201"))).count() == 2)
-    assert(AlignerCli.run(spark, AlignerCli.parseArgs(
-      Array("-f", path))).count() == 2)
+  }
+
+  test("AlignerCli.parseArgs names the option of a missing, non-numeric or out-of-range value") {
+    for ((args, option) <- Seq(
+        (Array("-f"), "-f"),
+        (Array("-f", "x.txt", "-n"), "-n"),
+        (Array("-f", "x.txt", "-n", "abc"), "-n"),
+        (Array("-f", "x.txt", "--seq-len", "1e3"), "--seq-len"),
+        (Array("-f", "x.txt", "-d", "0"), "-d"),
+        (Array("-f", "x.txt", "--max-distance", "-5"), "--max-distance"))) {
+      val e = intercept[IllegalArgumentException](AlignerCli.parseArgs(args))
+      assert(e.getMessage.contains(option) && e.getMessage.contains("usage: AlignerCli"),
+        s"${args.mkString(" ")} -> ${e.getMessage}")
+    }
   }
 }
