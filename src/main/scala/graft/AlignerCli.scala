@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *                    (src/wavefront.cu:211-330); here each task streams
   *                    its pairs through one reused WfaWorkspace, and task
   *                    width comes from the sequence file's splits.
-  *   -t <threads>     worker threads -> local[t] cores
+  *   -t <threads>     worker threads -> local[t] cores (0/absent = all)
   *   -p               print CIGARs ("idx: cigar", reference
   *                    src/wavefront.cu:293-300)
   *   -d <band>        max distance band (reference fixed 64,
@@ -47,8 +47,9 @@ object AlignerCli {
   /** Accepts the reference's short AND long forms (its generic parser
     * matches either, /root/reference/utils/arg_handler.c:88-138; long
     * names from the options table, src/aligner.cu:77-136). A missing or
-    * non-numeric value and a band below 1 fail here, naming the option,
-    * rather than later inside a Spark task. */
+    * non-numeric value, a negative -n/-l/-b/-t and a band below 1 fail
+    * here, naming the option, rather than later inside a Spark task (0
+    * keeps its meaning: all pairs, unbounded, all cores). */
   def parseArgs(args: Array[String]): Config = {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$msg; $Usage")
     def value(i: Int): String =
@@ -58,15 +59,19 @@ object AlignerCli {
       catch {
         case _: NumberFormatException => fail(s"${args(i)} needs a number, got '${args(i + 1)}'")
       }
+    def nonNegative[A](i: Int)(parse: String => A)(implicit n: Numeric[A]): A = {
+      val x = number(i)(parse)
+      if (n.signum(x) < 0) fail(s"${args(i)} must be 0 or more, got $x") else x
+    }
     var c = Config()
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "-f" | "--file" => c = c.copy(file = value(i)); i += 2
-        case "-n" | "--num-alignments" => c = c.copy(num = number(i)(_.toLong)); i += 2
-        case "-l" | "--seq-len" => c = c.copy(seqLen = number(i)(_.toInt)); i += 2
-        case "-b" | "--batch-size" => number(i)(_.toInt); i += 2 // checked, then ignored
-        case "-t" | "--cpu-threads" => c = c.copy(threads = number(i)(_.toInt)); i += 2
+        case "-n" | "--num-alignments" => c = c.copy(num = nonNegative(i)(_.toLong)); i += 2
+        case "-l" | "--seq-len" => c = c.copy(seqLen = nonNegative(i)(_.toInt)); i += 2
+        case "-b" | "--batch-size" => nonNegative(i)(_.toInt); i += 2 // checked, then ignored
+        case "-t" | "--cpu-threads" => c = c.copy(threads = nonNegative(i)(_.toInt)); i += 2
         case "-p" | "--print-cigars" => c = c.copy(print = true); i += 1
         case "-d" | "--max-distance" => c = c.copy(band = number(i)(_.toInt)); i += 2
         case other => fail(s"unknown option $other")

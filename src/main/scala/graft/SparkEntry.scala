@@ -289,9 +289,8 @@ object SparkEntry {
   /** Band-64 CIGAR stats on MATCHED pairs only. er04's cached distance
     * frame gates which pairs get the backtrace: exact distance <= 63 is
     * precisely "the band-64 alignment does not saturate", so the CIGAR
-    * pass — which must NOT trim common affixes (tie-break counterexample
-    * in Wfa's scaladoc) and is therefore the expensive mode — runs over
-    * the small matched-edge set instead of re-deriving candidates and
+    * pass — which carries a backtrace per diagonal, the expensive mode —
+    * runs over the small matched-edge set instead of re-deriving candidates and
     * re-scoring every pair (round-3 verdict #7: one full-cost scorer in
     * the combined Verify plan, not two). The edit-op-count invariant
     * #(X)+#(I)+#(D) == distance (reference replay loop,

@@ -56,9 +56,10 @@ object Levenshtein {
     * addition carry and the two horizontal-delta shift carries); the +1
     * top-boundary horizontal delta is injected as block 0's HP shift-in.
     * Common prefix/suffix are trimmed first (edit distance is invariant
-    * under common-affix removal — distance mode only, same rule as
-    * Wfa.align's distance path) and the shorter side becomes the pattern,
-    * minimizing the block count. */
+    * under common-affix removal, and the word count here grows with the
+    * core's length — unlike `Wfa.align`'s cells, which depend only on the
+    * distance) and the shorter side becomes the pattern, minimizing the
+    * block count. */
   def bitParallel(a: Array[Byte], b: Array[Byte], ws: LevenshteinWorkspace): Int = {
     // trim common prefix and suffix
     val mm = java.util.Arrays.mismatch(a, 0, a.length, b, 0, b.length)

@@ -95,47 +95,24 @@ object Wfa {
     if (m < 0) off + math.min(plen - v, tlen - h) else off + m
   }
 
-  /** Align `pattern` against `text` within `ws.band`. Byte-exact on any
-    * byte alphabet (the reference projects onto 2-bit ACGT; we keep full
-    * bytes — a superset that agrees on ACGT inputs).
-    */
-  def align(pattern: Array[Byte], text: Array[Byte], ws: WfaWorkspace): WfaResult =
-    align(pattern, pattern.length, text, text.length, ws)
-
-  /** Distance path: strips the common prefix and suffix before running the
-    * wavefront — unit-cost edit distance is invariant under common-affix
-    * removal, so near-duplicate pairs (the dominant ER case) collapse to a
-    * core of ~2·distance bytes.
+  /** Align `pattern` against `text` within `ws.band`: the raw banded
+    * wavefront, the direct re-expression of the reference kernel, in both
+    * distance and CIGAR mode. Byte-exact on any byte alphabet (the
+    * reference projects onto 2-bit ACGT; we keep full bytes — a superset
+    * that agrees on ACGT inputs).
     *
-    * CIGAR mode always runs the raw wavefront: the reference's piggybacked
-    * tie-break (DEL>SUB>INS) can choose a different equal-cost path when
-    * the affix context is removed (found by property test — e.g.
-    * ACTATACCGCACAG vs ACTATCCGGCACAG yields 1D...1I raw but 1X...1X
-    * trimmed), and exact CIGAR parity with the reference outranks speed
-    * there. */
-  def align(pattern: Array[Byte], plen: Int, text: Array[Byte], tlen: Int,
-            ws: WfaWorkspace): WfaResult = {
-    if (ws.withCigar) return alignNoTrim(pattern, plen, text, tlen, ws)
-    val m = Arrays.mismatch(pattern, 0, plen, text, 0, tlen)
-    val pre = if (m < 0) math.min(plen, tlen) else m
-    var suf = 0
-    val maxSuf = math.min(plen, tlen) - pre
-    while (suf < maxSuf && pattern(plen - 1 - suf) == text(tlen - 1 - suf)) suf += 1
-    // only pay the slice copies when the affixes dominate the pair
-    if ((pre + suf).toLong * 4 < math.min(plen, tlen))
-      return alignNoTrim(pattern, plen, text, tlen, ws)
-    if (pre + suf == plen && plen == tlen)
-      return WfaResult(0, saturated = false, null, 1L)
-    val coreP = Arrays.copyOfRange(pattern, pre, plen - suf)
-    val coreT = Arrays.copyOfRange(text, pre, tlen - suf)
-    alignNoTrim(coreP, coreP.length, coreT, coreT.length, ws)
-  }
-
-  /** The raw banded wavefront (no affix trimming) — the direct
-    * re-expression of the reference kernel. */
-  private[core] def alignNoTrim(pattern: Array[Byte], plen: Int,
-                                text: Array[Byte], tlen: Int,
-                                ws: WfaWorkspace): WfaResult = {
+    * The kernel never strips common affixes. Edit distance and the cell
+    * count (`(d+1)²`, or `band²` when saturated) do not depend on them, but
+    * the reference's piggybacked tie-break (DEL>SUB>INS) can choose a
+    * different equal-cost path when the affix context is removed (found by
+    * property test — e.g. ACTATACCGCACAG vs ACTATCCGGCACAG yields 1D...1I
+    * raw but 1X...1X trimmed), and exact CIGAR parity with the reference
+    * outranks speed. The greedy extend already crosses a shared prefix in
+    * one vectorized `Arrays.mismatch`.
+    */
+  def align(pattern: Array[Byte], text: Array[Byte], ws: WfaWorkspace): WfaResult = {
+    val plen = pattern.length
+    val tlen = text.length
     val band = ws.band
     val c = ws.center
     ws.reset()
@@ -146,7 +123,7 @@ object Wfa {
 
     ws.curr(c) = extend(pattern, plen, text, tlen, 0, 0)
     if (targetKAbs == 0 && ws.curr(c) == targetOff) {
-      val cig = if (ws.withCigar) renderDistanceZero(tlen) else null
+      val cig = if (ws.withCigar) renderCigar(pattern, plen, text, tlen, 0, ws.btCurr, 0) else null
       return WfaResult(0, saturated = false, cig, cells)
     }
     if (targetKAbs >= band) {
@@ -205,9 +182,6 @@ object Wfa {
     }
     WfaResult(band, saturated = true, null, cells)
   }
-
-  private def renderDistanceZero(tlen: Int): String =
-    if (tlen == 0) "" else s"${tlen}M"
 
   /** Replay the packed backtrace into a run-length CIGAR, re-running extends
     * on the original sequences to recover match runs — the same replay as

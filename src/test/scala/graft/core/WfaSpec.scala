@@ -219,11 +219,11 @@ class WfaSpec extends AnyFunSuite {
     }
   }
 
-  test("property: distance-mode affix trimming matches the raw wavefront; cigar mode never trims") {
+  test("property: distance and CIGAR workspaces agree; cells = (d+1)^2, band^2 or 1") {
+    val band = 64
     val rnd = new Random(23)
-    val wsDist = new WfaWorkspace(64, withCigar = false)
-    val wsRaw = new WfaWorkspace(64, withCigar = false)
-    val wsCig = new WfaWorkspace(64)
+    val wsDist = new WfaWorkspace(band, withCigar = false)
+    val wsCig = new WfaWorkspace(band)
     for (_ <- 1 to 500) {
       // bias toward shared affixes: mutate a base in the middle
       val base = randAcgt(rnd, 200)
@@ -236,13 +236,17 @@ class WfaSpec extends AnyFunSuite {
         } else randAcgt(rnd, 200)
       val p = base.getBytes
       val t = other.getBytes
-      val trimmed = Wfa.align(p, t, wsDist)
-      val raw = Wfa.alignNoTrim(p, p.length, t, t.length, wsRaw)
-      assert(trimmed.distance == raw.distance, s"$base / $other")
-      assert(trimmed.saturated == raw.saturated)
-      // cigar mode goes through the raw wavefront and stays replayable
+      val dist = Wfa.align(p, t, wsDist)
       val cig = Wfa.align(p, t, wsCig)
-      assert(cig.distance == raw.distance)
+      assert(dist.cigar == null)
+      assert((dist.distance, dist.saturated, dist.cells) == (cig.distance, cig.saturated, cig.cells),
+        s"$base / $other")
+      val d = cig.distance.toLong
+      val expectedCells =
+        if (!cig.saturated) (d + 1) * (d + 1)
+        else if (math.abs(p.length - t.length) >= band) 1L
+        else band.toLong * band
+      assert(cig.cells == expectedCells, s"$base / $other")
       if (!cig.saturated) {
         assert(CigarOps.replay(p, t, cig.cigar))
         assert(CigarOps.counts(cig.cigar).edits == cig.distance)

@@ -171,10 +171,15 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
         (Array("-f", "x.txt", "-n", "abc"), "-n"),
         (Array("-f", "x.txt", "--seq-len", "1e3"), "--seq-len"),
         (Array("-f", "x.txt", "-d", "0"), "-d"),
-        (Array("-f", "x.txt", "--max-distance", "-5"), "--max-distance"))) {
+        (Array("-f", "x.txt", "--max-distance", "-5"), "--max-distance"),
+        (Array("-f", "x.txt", "-l", "-5"), "-l"),
+        (Array("-f", "x.txt", "-n", "-1"), "-n"),
+        (Array("-f", "x.txt", "-t", "-2"), "-t"),
+        (Array("-f", "x.txt", "-b", "-1"), "-b"))) {
       val e = intercept[IllegalArgumentException](AlignerCli.parseArgs(args))
-      assert(e.getMessage.contains(option) && e.getMessage.contains("usage: AlignerCli"),
-        s"${args.mkString(" ")} -> ${e.getMessage}")
+      // the usage lists every option, so look for the name before it
+      val (msg, usage) = e.getMessage.splitAt(e.getMessage.indexOf("; usage: AlignerCli"))
+      assert(msg.contains(option) && usage.nonEmpty, s"${args.mkString(" ")} -> ${e.getMessage}")
     }
   }
 }

@@ -14,8 +14,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
   private def runStream(batches: Seq[Seq[CdcStream.Change]], name: String)
-      : Map[Long, (Long, String, String)] = {
-    val dir = java.nio.file.Files.createTempDirectory(s"cdc-$name").toString
+      : Map[Long, (Long, String, String)] = withWorkDir(s"cdc-$name") { dir =>
     batches.zipWithIndex.foreach { case (rows, i) =>
       val p = s"$dir/b$i"
       rows.toDF().coalesce(1).write.mode("overwrite").parquet(p)

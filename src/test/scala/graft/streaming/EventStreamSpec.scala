@@ -12,9 +12,8 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
 
   private def ts(sec: Long) = new Timestamp(sec * 1000)
 
-  test("windowed counts over a real stream (file source -> memory sink)") {
+  test("windowed counts over a real stream (file source -> memory sink)") { withWorkDir("events-stream") { dir =>
     // stage the driver's events table as a streaming source directory
-    val dir = java.nio.file.Files.createTempDirectory("events-stream").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
       .write.mode("overwrite").parquet(dir)
@@ -33,7 +32,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // stream (complete mode, no late data) == batch result
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
     assert(streamed.count() > 0)
-  }
+  }}
 
   test("sessionizer state is O(1): one hot user with 1M events streams through") {
     // events 10s apart with a 1000s gap every 100k events -> 10 sessions;
@@ -51,8 +50,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(sessions.map(_.total_value).sum == n.toDouble)
   }
 
-  test("streaming sessionizer (bounded state, event-time timeout) matches batch") {
-    val dir = java.nio.file.Files.createTempDirectory("sess-stream").toString
+  test("streaming sessionizer (bounded state, event-time timeout) matches batch") { withWorkDir("sess-stream") { dir =>
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -71,10 +69,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // be a batch session, and most batch sessions close within the data
     assert(streamed.exceptAll(batch).isEmpty)
     assert(streamed.count() > 0)
-  }
+  }}
 
-  test("streaming as-of enrichment matches the batch asofJoin on ordered arrival") {
-    val dir = java.nio.file.Files.createTempDirectory("asof-stream").toString
+  test("streaming as-of enrichment matches the batch asofJoin on ordered arrival") { withWorkDir("asof-stream") { dir =>
     val base = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -103,13 +100,12 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     val missing = batch.exceptAll(streamed).collect()
     assert(extra.isEmpty && missing.isEmpty,
       s"stream-only=${extra.take(5).mkString(";")} batch-only=${missing.take(5).mkString(";")}")
-  }
+  }}
 
-  test("as-of enrichment across micro-batches: state carries forward, never leaks the future") {
+  test("as-of enrichment across micro-batches: state carries forward, never leaks the future") { withWorkDir("asof-mb") { dir =>
     // one file per micro-batch (maxFilesPerTrigger=1), mtimes forced so
     // the file source processes them in order — the single-batch parity
     // test never exercises cross-batch state at all
-    val dir = java.nio.file.Files.createTempDirectory("asof-mb").toString
     def write(name: String, rows: Seq[(Long, Long, Long, String)], mtime: Long): Unit = {
       val p = s"$dir/$name"
       rows.map { case (id, sec, user, tpe) => (id, ts(sec), user, tpe, 0.0) }
@@ -137,10 +133,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
         Option(r.getAs[java.lang.Long]("matched_event_id")).map(_.toLong)).toMap
     assert(rows(2L).isEmpty, "late left must not be matched to a FUTURE right")
     assert(rows(3L).contains(1L), "in-order left must match state from the prior batch")
-  }
+  }}
 
-  test("streaming interval pairs match the batch RangeJoin on the events table") {
-    val dir = java.nio.file.Files.createTempDirectory("ivl-stream").toString
+  test("streaming interval pairs match the batch RangeJoin on the events table") { withWorkDir("ivl-stream") { dir =>
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
@@ -163,10 +158,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(extra.isEmpty && missing.isEmpty,
       s"stream-only=${extra.take(5).mkString(";")} batch-only=${missing.take(5).mkString(";")}")
     assert(streamed.count() > 0)
-  }
+  }}
 
-  test("interval pairs across micro-batches: in-horizon partners pair, each pair once") {
-    val dir = java.nio.file.Files.createTempDirectory("ivl-mb").toString
+  test("interval pairs across micro-batches: in-horizon partners pair, each pair once") { withWorkDir("ivl-mb") { dir =>
     def write(name: String, rows: Seq[(Long, Long, Long)], mtime: Long): Unit = {
       val p = s"$dir/$name"
       rows.map { case (id, sec, user) => (id, ts(sec), user, "e", 0.0) }
@@ -195,12 +189,11 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
       .toSeq.sorted
     assert(got == Seq((1L, 2L, 50000000L), (2L, 3L, 70000000L)),
       s"expected the in-batch and cross-batch pairs exactly once: $got")
-  }
+  }}
 
-  test("interval pairs maxBuffer guard: hot key caps its buffer, oldest partners dropped") {
+  test("interval pairs maxBuffer guard: hot key caps its buffer, oldest partners dropped") { withWorkDir("ivl-cap") { dir =>
     // 12 same-user events 1s apart, width 100s (all-pairs = 66), buffer
     // capped at 4: the reference fold keeps the 4 most recent events
-    val dir = java.nio.file.Files.createTempDirectory("ivl-cap").toString
     val events = (0 until 12).map(i => (i.toLong, ts(10000L + i), 7L, "e", 0.0))
     events.toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(dir)
@@ -232,9 +225,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
         spark.read.parquet(dir), Seq("user_id"), "ts", "event_id", 100L * 1000000L)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(got.subsetOf(batch))
-  }
+  }}
 
-  test("interval pairs survive width > idle TTL with a null-ts-only batch (timeout clamp)") {
+  test("interval pairs survive width > idle TTL with a null-ts-only batch (timeout clamp)") { withWorkDir("ivl-clamp") { dir =>
     // round-4 advice: with widthUs >= idleTtlSeconds*1e6, a batch that
     // delivers ONLY null-ts rows for a key computes its timeout horizon
     // from stale retained events (as low as watermark - width), so the
@@ -243,7 +236,6 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     // above. Three batches: (1) user 7's events set its state, (2) user
     // 8 advances the watermark far past user 7's horizon + TTL, (3) a
     // null-ts row for user 7 forces the stale-horizon timeout update.
-    val dir = java.nio.file.Files.createTempDirectory("ivl-clamp").toString
     def write(name: String, rows: Seq[(Long, java.sql.Timestamp, Long)], mtime: Long): Unit = {
       val p = s"$dir/$name"
       rows.map { case (id, t, user) => (id, t, user, "e", 0.0) }
@@ -268,10 +260,9 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     val got = spark.table("ivl_clamp").collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
     assert(got == Set((1L, 2L)), s"only the b1 pair is in width: $got")
-  }
+  }}
 
-  test("streaming dedup keeps first occurrence per key; state bounded by watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("dedup-stream").toString
+  test("streaming dedup keeps first occurrence per key; state bounded by watermark") { withWorkDir("dedup-stream") { dir =>
     val base = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("event_type"))
     base.unionAll(base).write.mode("overwrite").parquet(dir) // every event duplicated
@@ -286,7 +277,7 @@ class EventStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(streamed.groupBy("event_id").count().where(col("count") > 1).isEmpty)
     // batch path: same operator degenerates to distinct-by-key
     assert(EventStream.dedupByKey(spark.read.parquet(dir), "event_id").count() == base.count())
-  }
+  }}
 
   test("sessionizer: gap splits sessions; totals preserved") {
     val events = Seq(
