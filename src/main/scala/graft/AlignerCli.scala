@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions._
   *   -p               print CIGARs ("idx: cigar", reference
   *                    src/wavefront.cu:293-300)
   *   -d <band>        max distance band (reference fixed 64,
-  *                    wavefront_structures.h:62; configurable here)
+  *                    wavefront_structures.h:62; configurable here up to
+  *                    Wfa.MaxBand = 46,340: each task's backtrace table
+  *                    holds band² bytes)
   *
   * A user of the reference CLI can run the same file through this entry
   * point and get the same distances and CIGARs (golden-tested).
@@ -47,9 +49,9 @@ object AlignerCli {
   /** Accepts the reference's short AND long forms (its generic parser
     * matches either, /root/reference/utils/arg_handler.c:88-138; long
     * names from the options table, src/aligner.cu:77-136). A missing or
-    * non-numeric value, a negative -n/-l/-b/-t and a band below 1 fail
-    * here, naming the option, rather than later inside a Spark task (0
-    * keeps its meaning: all pairs, unbounded, all cores). */
+    * non-numeric value, a negative -n/-l/-b/-t and a band outside
+    * 1..Wfa.MaxBand fail here, naming the option, rather than later inside
+    * a Spark task (0 keeps its meaning: all pairs, unbounded, all cores). */
   def parseArgs(args: Array[String]): Config = {
     def fail(msg: String): Nothing = throw new IllegalArgumentException(s"$msg; $Usage")
     def value(i: Int): String =
@@ -79,6 +81,9 @@ object AlignerCli {
     }
     if (c.file.isEmpty) fail("-f|--file is required")
     if (c.band < 1) fail(s"-d|--max-distance must be at least 1, got ${c.band}")
+    if (c.band > Wfa.MaxBand)
+      fail(s"-d|--max-distance must be at most ${Wfa.MaxBand} (the backtrace table holds " +
+        s"band² bytes per task), got ${c.band}")
     c
   }
 

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.lang.invoke.MethodHandles
+import java.nio.ByteOrder
 import java.util.Arrays
 
 /** Result of one pairwise alignment.
@@ -16,35 +18,33 @@ final case class WfaResult(distance: Int, saturated: Boolean, cigar: String, cel
 
 /** Reusable per-task scratch space: two wavefront offset rows (with -1 init
   * and one padding cell per side so boundary diagonals need no branches,
-  * mirroring /root/reference/src/kernels.cu:205-219) and two backtrace
-  * buffers (2 bits/op, flattened `[diagonal][word]`, mirroring the 128-bit
-  * packed backtraces of /root/reference/src/wavefront_structures.h:52-60,
-  * generalized to any band).
+  * mirroring the reference's kernels.cu:205-219) and, in CIGAR mode, a
+  * triangular backtrace table of one op byte per wavefront cell: the op
+  * that won cell (d, k) sits at `d*d + d + k`, so steps 1..band-1 fill
+  * band² bytes. A CIGAR band is at most [[Wfa.MaxBand]], the largest whose
+  * table an `Int` can index.
   *
   * Allocate ONE per partition/thread and reuse across pairs — the north-star
   * "no per-pair object churn". Not thread-safe.
   */
 final class WfaWorkspace(val band: Int, val withCigar: Boolean = true) {
   require(band >= 1, s"band must be >= 1, got $band")
+  require(!withCigar || band <= Wfa.MaxBand,
+    s"a CIGAR band must be at most ${Wfa.MaxBand} (its backtrace table holds band² op bytes), got $band")
   // offsets index of diagonal k is `center + k`; k ranges over [-band, band]
   // plus one -1 padding cell on each side.
   val center: Int = band + 1
   private[core] val size: Int = 2 * band + 3
-  private[core] var curr: Array[Int] = new Array[Int](size)
-  private[core] var next: Array[Int] = new Array[Int](size)
-  // ops are appended at position d-1 for d in 1..band-1 -> max bit index
-  // 2*(band-2)+1 -> words per diagonal:
-  private[core] val btWords: Int = math.max(1, (band - 1 + 31) / 32)
-  private[core] var btCurr: Array[Long] = if (withCigar) new Array[Long](size * btWords) else null
-  private[core] var btNext: Array[Long] = if (withCigar) new Array[Long](size * btWords) else null
+  private[core] val curr: Array[Int] = new Array[Int](size)
+  private[core] val next: Array[Int] = new Array[Int](size)
+  // the winning op of cell (d, k) at d*d + d + k, and one walk's ops in
+  // forward order
+  private[core] val ops: Array[Byte] = if (withCigar) new Array[Byte](band * band) else null
+  private[core] val path: Array[Byte] = if (withCigar) new Array[Byte](band) else null
 
   private[core] def reset(): Unit = {
     Arrays.fill(curr, -1)
     Arrays.fill(next, -1)
-    if (withCigar) {
-      Arrays.fill(btCurr, 0L)
-      Arrays.fill(btNext, 0L)
-    }
   }
 }
 
@@ -54,7 +54,7 @@ final class WfaWorkspace(val band: Int, val withCigar: Boolean = true) {
   * `WF_edit_distance` (/root/reference/src/kernels.cu:182-310). One thread
   * processes one pair sequentially (the reference used a 64-thread block per
   * pair; on the JVM the parallelism unit is the Spark task, and the greedy
-  * extend is vectorized by `java.util.Arrays.mismatch`).
+  * extend compares 8 bytes per `Long`).
   *
   * Exact-parity semantics preserved from the reference:
   *  - diagonal k = h - v, offset = h (text horizontal, pattern vertical;
@@ -73,6 +73,11 @@ final class WfaWorkspace(val band: Int, val withCigar: Boolean = true) {
   *    (generate_cigars, kernels.cu:398-498), rendered run-length with the
   *    *intended* semantics of `generate_ascii_cigar`
   *    (/root/reference/src/wavefront.cuh:146-184; see SURVEY.md S10 bug note)
+  *
+  * The reference carries a packed backtrace per diagonal and copies it from
+  * cell to cell (wavefront_structures.h:52-60), a GPU layout. Here each cell
+  * writes its winning op once and the CIGAR walks back from the target, as
+  * in WFA as published (Marco-Sola et al., Bioinformatics 2021).
   */
 object Wfa {
 
@@ -80,19 +85,37 @@ object Wfa {
   val OpSub = 2 // k
   val OpIns = 1 // k - 1
 
+  /** The largest band whose band² backtrace table an `Int` can index. */
+  val MaxBand = 46340
+
+  private val Bytes8 = MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.LITTLE_ENDIAN)
+
   /** Greedy extend: longest common run from (v,h) = (off-k, off) down the
-    * diagonal. Reference compares 16 packed bases per u32 via XOR+__clz
-    * (kernels.cu:27-109); the JVM analogue is Arrays.mismatch (vectorized
-    * intrinsic). Out-of-range starts return the offset unchanged, matching
-    * the reference's `while (v < plen && h < tlen)` guard.
+    * diagonal. The reference compares 16 packed bases per u32 via
+    * XOR+__clz (kernels.cu:27-109); here the first 8 bytes of each side are
+    * one little-endian `Long`, so the first differing byte is the XOR's
+    * trailing zero count / 8. A run that fills that word continues through
+    * `Arrays.mismatch` (a vectorized intrinsic), as does a run with fewer
+    * than 8 bytes left, so no read passes either array's end. Out-of-range
+    * starts return the offset unchanged, matching the reference's
+    * `while (v < plen && h < tlen)` guard.
     */
   @inline private def extend(p: Array[Byte], plen: Int, t: Array[Byte], tlen: Int,
                              k: Int, off: Int): Int = {
     val v = off - k
     val h = off
     if (v < 0 || h < 0 || v >= plen || h >= tlen) return off
-    val m = Arrays.mismatch(p, v, plen, t, h, tlen)
-    if (m < 0) off + math.min(plen - v, tlen - h) else off + m
+    val n = math.min(plen - v, tlen - h)
+    if (n < 8) {
+      val m = Arrays.mismatch(p, v, v + n, t, h, h + n)
+      return if (m < 0) off + n else off + m
+    }
+    val x = (Bytes8.get(p, v): Long) ^ (Bytes8.get(t, h): Long)
+    if (x != 0L) off + (java.lang.Long.numberOfTrailingZeros(x) >>> 3)
+    else {
+      val m = Arrays.mismatch(p, v + 8, v + n, t, h + 8, h + n)
+      if (m < 0) off + n else off + 8 + m
+    }
   }
 
   /** Align `pattern` against `text` within `ws.band`: the raw banded
@@ -108,7 +131,18 @@ object Wfa {
     * property test — e.g. ACTATACCGCACAG vs ACTATCCGGCACAG yields 1D...1I
     * raw but 1X...1X trimmed), and exact CIGAR parity with the reference
     * outranks speed. The greedy extend already crosses a shared prefix in
-    * one vectorized `Arrays.mismatch`.
+    * one pass.
+    *
+    * In CIGAR mode step d writes the op of each cell k in [-d, d] to
+    * `ws.ops(d*d + d + k)`. The table is never reset, because the walk back
+    * from (dist, targetK) reads only cells written for the current pair.
+    * At step d, the previous row holds -1 outside [-(d-1), d-1] (reset, and
+    * one padding cell per side), so a neighbour outside it offers at most
+    * 0: -1 as DEL, 0 as SUB or INS. A neighbour inside offers at least 0 as
+    * DEL and at least 1 as SUB or INS. The one tie, at k = -d, is DEL from
+    * k+1 at offset 0 against SUB/INS at 0, and DEL wins it. So every cell's
+    * winning source, (d-1, k + op - 2), lies in the previous wavefront,
+    * and the walk reaches (0, 0) through this pair's cells only.
     */
   def align(pattern: Array[Byte], text: Array[Byte], ws: WfaWorkspace): WfaResult = {
     val plen = pattern.length
@@ -123,7 +157,7 @@ object Wfa {
 
     ws.curr(c) = extend(pattern, plen, text, tlen, 0, 0)
     if (targetKAbs == 0 && ws.curr(c) == targetOff) {
-      val cig = if (ws.withCigar) renderCigar(pattern, plen, text, tlen, 0, ws.btCurr, 0) else null
+      val cig = if (ws.withCigar) renderCigar(pattern, plen, text, tlen, 0, 0, ws) else null
       return WfaResult(0, saturated = false, cig, cells)
     }
     if (targetKAbs >= band) {
@@ -134,13 +168,12 @@ object Wfa {
 
     var curr = ws.curr
     var next = ws.next
-    var btCurr = ws.btCurr
-    var btNext = ws.btNext
-    val w = ws.btWords
+    val ops = ws.ops
     val withCigar = ws.withCigar
 
     var d = 1
     while (d < band) {
+      val row = d * d + d
       var k = -d
       while (k <= d) {
         val del = curr(c + k + 1)
@@ -151,45 +184,44 @@ object Wfa {
         val subP = (sub << 2) | OpSub
         val insP = (ins << 2) | OpIns
         val maxP = math.max(math.max(delP, subP), insP)
-        val off = maxP >> 2
-        if (withCigar) {
-          val op = maxP & 3
-          // prev backtrace lives at diagonal k + (op - 2): DEL->k+1, SUB->k, INS->k-1
-          val src = (c + k + (op - 2)) * w
-          val dst = (c + k) * w
-          val bitPos = (d - 1) << 1
-          val word = bitPos >> 6
-          var i = 0
-          while (i < w) { btNext(dst + i) = btCurr(src + i); i += 1 }
-          btNext(dst + word) |= op.toLong << (bitPos & 63)
-        }
-        next(c + k) = extend(pattern, plen, text, tlen, k, off)
+        if (withCigar) ops(row + k) = (maxP & 3).toByte
+        next(c + k) = extend(pattern, plen, text, tlen, k, maxP >> 2)
         k += 1
       }
       cells += 2L * d + 1L
 
       if (targetKAbs <= d && next(c + targetK) == targetOff) {
-        val cig = if (withCigar)
-          renderCigar(pattern, plen, text, tlen, d, btNext, (c + targetK) * w)
-        else null
+        val cig = if (withCigar) renderCigar(pattern, plen, text, tlen, d, targetK, ws) else null
         return WfaResult(d, saturated = false, cig, cells)
       }
 
       // swap double buffers (kernels.cu:272-283)
       val t0 = curr; curr = next; next = t0
-      if (withCigar) { val t1 = btCurr; btCurr = btNext; btNext = t1 }
       d += 1
     }
     WfaResult(band, saturated = true, null, cells)
   }
 
-  /** Replay the packed backtrace into a run-length CIGAR, re-running extends
-    * on the original sequences to recover match runs — the same replay as
+  /** Walk the backtrace table back from (dist, targetK) to (0, 0), then
+    * replay the ops forward into a run-length CIGAR, re-running extends on
+    * the original sequences to recover match runs — the same replay as
     * generate_cigars (/root/reference/src/kernels.cu:428-498) emitting the
     * corrected run-length rendering directly.
     */
   private def renderCigar(p: Array[Byte], plen: Int, t: Array[Byte], tlen: Int,
-                          dist: Int, bt: Array[Long], btBase: Int): String = {
+                          dist: Int, targetK: Int, ws: WfaWorkspace): String = {
+    val ops = ws.ops
+    val path = ws.path
+    var k = targetK
+    var d = dist
+    while (d > 0) {
+      val op = ops(d * d + d + k)
+      path(d - 1) = op
+      k += op - 2 // DEL came from k+1, SUB from k, INS from k-1
+      d -= 1
+    }
+    // the walk ends at (d, k) = (0, 0), where the forward replay starts
+
     val sb = new java.lang.StringBuilder(dist * 3 + 8)
     var lastOp: Char = 0
     var runLen = 0
@@ -202,20 +234,17 @@ object Wfa {
       }
     }
     var off = 0
-    var k = 0
-    var d = 0
     while (d < dist) {
       val ext = extend(p, plen, t, tlen, k, off)
       emit('M', ext - off)
       off = ext
-      val op = ((bt(btBase + (d >> 5)) >>> ((d & 31) << 1)) & 3L).toInt
-      op match {
+      path(d).toInt match {
         case OpDel => emit('D', 1); k -= 1
         case OpSub => emit('X', 1); off += 1
         case OpIns => emit('I', 1); k += 1; off += 1
-        case _ =>
+        case op =>
           throw new IllegalStateException(
-            s"corrupt backtrace op 0 at d=$d dist=$dist k=$k off=$off")
+            s"corrupt backtrace op $op at d=$d dist=$dist k=$k off=$off")
       }
       d += 1
     }

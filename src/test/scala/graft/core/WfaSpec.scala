@@ -21,12 +21,13 @@ class WfaSpec extends AnyFunSuite {
     sb.toString
   }
 
+  private val CodeAlpha = "abcdefghij XYZ(){};.\n01"
+
   private def randCode(rnd: Random, maxLen: Int): String = {
-    val alpha = "abcdefghij XYZ(){};.\n01"
     val n = rnd.nextInt(maxLen + 1)
     val sb = new StringBuilder(n)
     var i = 0
-    while (i < n) { sb.append(alpha.charAt(rnd.nextInt(alpha.length))); i += 1 }
+    while (i < n) { sb.append(CodeAlpha.charAt(rnd.nextInt(CodeAlpha.length))); i += 1 }
     sb.toString
   }
 
@@ -262,5 +263,100 @@ class WfaSpec extends AnyFunSuite {
       assert(Wfa.align(p.getBytes, t.getBytes, shared) ==
              Wfa.align(p.getBytes, t.getBytes, fresh))
     }
+  }
+
+  // --- golden digest (pins the CIGAR bytes, not only their validity) ---
+
+  /** `base` with `k` random substitutions, insertions and deletions drawn
+    * from `alpha`. */
+  private def mutate(rnd: Random, base: String, k: Int, alpha: String): String = {
+    val sb = new StringBuilder(base)
+    for (_ <- 0 until k) {
+      val c = alpha.charAt(rnd.nextInt(alpha.length))
+      rnd.nextInt(3) match {
+        case 0 if sb.nonEmpty => sb.setCharAt(rnd.nextInt(sb.length), c)
+        case 2 if sb.nonEmpty => sb.deleteCharAt(rnd.nextInt(sb.length))
+        case _ => sb.insert(rnd.nextInt(sb.length + 1), c)
+      }
+    }
+    sb.toString
+  }
+
+  test("golden: digest of (distance, saturated, cells, cigar) over 5,000 ACGT and 1,000 code-like pairs") {
+    val rnd = new Random(20261020)
+    val pairs =
+      Seq.fill(5000) {
+        val p = randAcgt(rnd, 300)
+        (p, if (rnd.nextInt(8) == 0) randAcgt(rnd, 300) else mutate(rnd, p, rnd.nextInt(80), "ACGT"))
+      } ++ Seq.fill(1000) {
+        val p = randCode(rnd, 400)
+        (p, if (rnd.nextInt(8) == 0) randCode(rnd, 400) else mutate(rnd, p, rnd.nextInt(80), CodeAlpha))
+      }
+    val wsCig = new WfaWorkspace(64)
+    val wsDist = new WfaWorkspace(64, withCigar = false)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    pairs.foreach { case (p, t) =>
+      val (pb, tb) = (p.getBytes("UTF-8"), t.getBytes("UTF-8"))
+      val c = Wfa.align(pb, tb, wsCig)
+      val d = Wfa.align(pb, tb, wsDist)
+      md.update(s"${c.distance},${c.saturated},${c.cells},${c.cigar};${d.distance},${d.saturated},${d.cells},${d.cigar}\n"
+        .getBytes("UTF-8"))
+    }
+    val digest = md.digest().map(b => f"${b & 0xff}%02x").mkString
+    assert(digest == "e76d6851f71f74b4e62b1e98649d7f6e6a9c9b887bd437ecad2fa6baf27b3e54", s"digest $digest")
+  }
+
+  // --- the 8-byte extend at its edges ---
+
+  test("extend: shared byte runs ending at every offset mod 8 and at the last byte, any byte value") {
+    val rnd = new Random(31)
+    val edgeBytes = Array[Byte](0x00, 0xFF.toByte, 0x80.toByte, 0x7F, 'A', 0xC3.toByte)
+    def bytes(n: Int): Array[Byte] = Array.fill(n) {
+      if (rnd.nextBoolean()) edgeBytes(rnd.nextInt(edgeBytes.length)) else rnd.nextInt(256).toByte
+    }
+    val ws = new WfaWorkspace(64)
+    def check(p: Array[Byte], t: Array[Byte]): Unit = {
+      val r = Wfa.align(p, t, ws)
+      val shown = s"${p.mkString(",")} / ${t.mkString(",")}"
+      assert(r.distance == Levenshtein.distance(p, t), shown)
+      assert(CigarOps.replay(p, t, r.cigar), s"$shown / ${r.cigar}")
+      assert(CigarOps.counts(r.cigar).edits == r.distance, shown)
+    }
+    for (len <- 0 to 40; end <- 0 to len) {
+      // p and every t below share the run [0, end)
+      val p = bytes(len)
+      val sub = p.clone()
+      if (end < len) sub(end) = (sub(end) ^ (1 << rnd.nextInt(8))).toByte
+      check(p, sub)
+      check(p, p.take(end) ++ bytes(1) ++ p.drop(end))
+      check(p, p.take(end) ++ p.drop(end + 1))
+      check(p, p.take(end))
+      check(p.take(end), p)
+    }
+  }
+
+  test("workspace reuse from a long pair to a short one: no leftover byte extends a run") {
+    val rnd = new Random(37)
+    val shared = new WfaWorkspace(64)
+    for (_ <- 1 to 200) {
+      val long = Array.fill(100 + rnd.nextInt(200))(rnd.nextInt(256).toByte)
+      Wfa.align(long, long.clone(), shared)
+      // both sides are prefixes of the long pair, so any byte read past
+      // their ends would match and lengthen a run
+      val (n, m) = (rnd.nextInt(17), rnd.nextInt(17))
+      val (p, t) = (long.take(n), long.take(m))
+      val r = Wfa.align(p, t, shared)
+      assert(r == Wfa.align(p, t, new WfaWorkspace(64)), s"n=$n m=$m")
+      assert(r.distance == math.abs(n - m))
+    }
+  }
+
+  test("a CIGAR band whose backtrace table an Int cannot index is rejected, naming the band") {
+    for (band <- Seq(46341, 3000000)) {
+      val e = intercept[IllegalArgumentException](new WfaWorkspace(band))
+      assert(e.getMessage.contains(band.toString), e.getMessage)
+    }
+    // distance mode keeps no table, so its band is not bound by one
+    assert(new WfaWorkspace(46341, withCigar = false).band == 46341)
   }
 }

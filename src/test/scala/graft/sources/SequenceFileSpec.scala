@@ -172,6 +172,8 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
         (Array("-f", "x.txt", "--seq-len", "1e3"), "--seq-len"),
         (Array("-f", "x.txt", "-d", "0"), "-d"),
         (Array("-f", "x.txt", "--max-distance", "-5"), "--max-distance"),
+        (Array("-f", "x.txt", "-d", "3000000"), "-d"),
+        (Array("-f", "x.txt", "--max-distance", "46341"), "--max-distance"),
         (Array("-f", "x.txt", "-l", "-5"), "-l"),
         (Array("-f", "x.txt", "-n", "-1"), "-n"),
         (Array("-f", "x.txt", "-t", "-2"), "-t"),
@@ -181,5 +183,7 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
       val (msg, usage) = e.getMessage.splitAt(e.getMessage.indexOf("; usage: AlignerCli"))
       assert(msg.contains(option) && usage.nonEmpty, s"${args.mkString(" ")} -> ${e.getMessage}")
     }
+    // the largest band whose backtrace table an Int can index still parses
+    assert(AlignerCli.parseArgs(Array("-f", "x.txt", "-d", "46340")).band == 46340)
   }
 }
