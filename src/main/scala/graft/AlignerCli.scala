@@ -3,7 +3,6 @@ package graft
 import graft.core.{Wfa, WfaWorkspace}
 import graft.sources.SequenceFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** CLI with the reference's argument surface
   * (/root/reference/src/aligner.cu:75-139):
@@ -91,17 +90,12 @@ object AlignerCli {
     * (pair_id, distance, saturated, cigar). */
   def run(spark: SparkSession, c: Config): DataFrame = {
     import spark.implicits._
-    var pairs = SequenceFile.read(spark, c.file)
-    if (c.num > 0) pairs = pairs.where(col("pair_id") < c.num)
     // reference capacity parity: each slot holds 2*seq_len bytes (0 = unbounded),
     // checked per pair as it is aligned
     val seqLen = c.seqLen
     val cap = 2L * seqLen
     val band = c.band
-    pairs
-      .select($"pair_id".as[Long],
-        $"pattern".cast("binary").as[Array[Byte]],
-        $"text".cast("binary").as[Array[Byte]])
+    SequenceFile.readBytes(spark, c.file, c.num)
       .mapPartitions { it =>
         val ws = new WfaWorkspace(band, withCigar = true)
         it.map { case (id, p, t) =>
@@ -128,7 +122,7 @@ object AlignerCli {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
-    val out = run(spark, c).orderBy("pair_id").collect()
+    val out = run(spark, c).collect() // in pair_id order: splits and lines are in file order
     val wall = (System.nanoTime() - t0) / 1e9
     if (c.print) out.foreach { r =>
       println(s"${r.getLong(0)}: ${if (r.getBoolean(2)) "*" else r.getString(3)}")

@@ -2,9 +2,6 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.core.{Hashing, Levenshtein}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
@@ -380,36 +377,8 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     try body finally spark.conf.unset(key)
   }
 
-  /** Spark jobs started while `body` runs on this thread, told apart by
-    * job group. A marker job flushes the listener bus, which delivers
-    * events in order. */
-  private def jobsStartedBy(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val started = new AtomicInteger()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(`marker`) => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      body
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(30, TimeUnit.SECONDS), "listener bus did not flush")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    started.get
-  }
+  /** Spark jobs started while `body` runs on this thread. */
+  private def jobsStartedBy(body: => Any): Int = jobTasks(body).length
 
   test("resume: completed stages are not recomputed; output identical") {
     withWorkDir("er-resume") { dir =>

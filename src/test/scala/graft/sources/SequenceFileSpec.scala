@@ -3,10 +3,14 @@ package graft.sources
 import graft.{AlignerCli, SparkTestBase}
 import graft.core.Levenshtein
 import org.apache.spark.SparkException
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.zip.GZIPOutputStream
 import scala.util.Random
 
 /** Reference-format I/O (S1) and the CLI surface (S14/E1). Every file a
@@ -31,14 +35,19 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     }
   }
 
-  private def assertMalformed(content: String): Unit = withWorkDir("bad") { dir =>
-    val f = Files.writeString(Paths.get(dir, "bad.txt"), content)
-    val e = intercept[Exception] {
-      SequenceFile.read(spark, f.toString).collect()
+  private def assertMalformed(content: String): Unit =
+    assertMalformed("bad.txt", content.getBytes(UTF_8), "malformed")
+
+  /** Reading `content` as file `name` fails with a message holding `why`. */
+  private def assertMalformed(name: String, content: Array[Byte], why: String): Unit =
+    withWorkDir("bad") { dir =>
+      val f = Files.write(Paths.get(dir, name), content)
+      val e = intercept[Exception] {
+        SequenceFile.read(spark, f.toString).collect()
+      }
+      assert(e.getMessage.contains(why) ||
+        Option(e.getCause).exists(_.getMessage.contains(why)), e)
     }
-    assert(e.getMessage.contains("malformed") ||
-      Option(e.getCause).exists(_.getMessage.contains("malformed")), e)
-  }
 
   test("read fails fast on malformed markers (reference parity)") {
     assertMalformed(">ACGT\n>OOPS\n")
@@ -52,25 +61,83 @@ class SequenceFileSpec extends AnyFunSuite with SparkTestBase
     assertMalformed(">A\r<C\r>G\r<T\r")
   }
 
+  test("read takes one uncompressed file: a gzip file is malformed at line 1") {
+    val gz = new ByteArrayOutputStream()
+    val out = new GZIPOutputStream(gz)
+    out.write(">A\n<C\n".getBytes(UTF_8))
+    out.close()
+    assertMalformed("pairs.txt.gz", gz.toByteArray, "malformed sequence file at line 1:")
+  }
+
   test("read returns the same pairs at every split size") {
     withWorkDir("seqs") { dir =>
-      val pairs = Seq(("ACGT", "ACTT"), ("", "GG"), ("T", ""), ("GATTACA", "GATACA"), ("C", "C"))
+      // a '>' inside a line starts no pair
+      val pairs = Seq(("ACGT", "ACTT"), ("G>A", ">T"), ("", "GG"), ("T", ""), ("GATTACA", "GATACA"),
+        ("C", "C"))
       val lf = writeSeqFile(dir, pairs)
       val crlf = Paths.get(dir, "seqs-crlf.txt")
       Files.writeString(crlf, Files.readString(Paths.get(lf)).replace("\n", "\r\n"))
+      val unterminated = Paths.get(dir, "seqs-no-final-newline.txt")
+      Files.writeString(unterminated, Files.readString(Paths.get(lf)).stripSuffix("\n"))
+      val empty = Files.writeString(Paths.get(dir, "empty.txt"), "")
       val expected = pairs.zipWithIndex.map { case ((p, t), i) => (i.toLong, p, t) }
       try {
-        for (path <- Seq(lf, crlf.toString)) {
-          val len = Files.size(Paths.get(path))
+        for ((path, want) <- Seq(lf -> expected, crlf.toString -> expected,
+            unterminated.toString -> expected, empty.toString -> Nil)) {
+          val bytes = Files.readAllBytes(Paths.get(path))
+          val len = bytes.length.toLong
+          val starts = bytes.indices.filter(i => bytes(i) == '>' && (i == 0 || bytes(i - 1) == '\n'))
           // every split edge position is hit, including between '\n' and '>'
-          for (split <- 1L to len) {
+          for (split <- 1L to len.max(1)) {
             spark.conf.set("spark.sql.files.maxPartitionBytes", split)
-            val rows = SequenceFile.read(spark, path).orderBy("pair_id").collect()
-              .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
-            assert(rows == expected, s"$path at $split-byte splits")
+            val read = SequenceFile.read(spark, path)
+            def rows(df: DataFrame) =
+              df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+            assert(rows(read.orderBy("pair_id")) == want, s"$path at $split-byte splits")
+            // rows arrive in id order without a sort: one partition per split
+            // (an empty file reads as one empty partition)
+            assert(rows(read) == want, s"$path at $split-byte splits, unsorted")
+            val splitStarts = (0L until len by split).map(_.toInt)
+            assert(read.rdd.getNumPartitions == splitStarts.length.max(1), s"$path at $split-byte splits")
+            // -n 3 aligns pairs 0-2 only, and only the splits whose first
+            // pair id is below 3 are read at all
+            val aligned = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path, "-n", "3")))
+            assert(aligned.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq ==
+              want.take(3).map { case (i, p, t) => (i, Levenshtein.distance(p, t)) },
+              s"$path at $split-byte splits, -n 3")
+            val read3 = splitStarts.count(s => starts.count(_ < s) < 3)
+            assert(aligned.rdd.getNumPartitions == read3.max(1), s"$path at $split-byte splits, -n 3")
           }
         }
       } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
+  test("AlignerCli.run + collect starts 2 jobs: the record count of every split but the last, then the alignment") {
+    withWorkDir("seqs") { dir =>
+      val path = writeSeqFile(dir, (1 to 40).map(i => ("ACGT" * i, "ACGA" * i)))
+      val len = Files.size(Paths.get(path))
+      val split = len / 5 + 1
+      val splits = ((len + split - 1) / split).toInt
+      assert(splits == 5)
+      spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+      try {
+        val tasks = jobTasks {
+          assert(AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", path))).collect().length == 40)
+        }
+        assert(tasks == Seq(splits - 1, splits))
+      } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
+  test("AlignerCli aligns the bytes as written: invalid UTF-8 is not replaced") {
+    withWorkDir("seqs") { dir =>
+      // as text, both 0xFF and 0xFE would decode to U+FFFD and match
+      val f = Files.write(Paths.get(dir, "bytes.txt"),
+        Array('>', 'A', 0xFF, 'C', '\n', '<', 'A', 0xFE, 'C', '\n').map(_.toByte))
+      val out = AlignerCli.run(spark, AlignerCli.parseArgs(Array("-f", f.toString))).collect()
+      assert(out.map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2), r.getString(3))).toSeq ==
+        Seq((0L, 1, false, "1M1X1M")))
     }
   }
 
