@@ -62,7 +62,7 @@ object AlignerCli {
       }
     def nonNegative[A](i: Int)(parse: String => A)(implicit n: Numeric[A]): A = {
       val x = number(i)(parse)
-      if (n.signum(x) < 0) fail(s"${args(i)} must be 0 or more, got $x") else x
+      if (n.lt(x, n.zero)) fail(s"${args(i)} must be 0 or more, got $x") else x
     }
     var c = Config()
     var i = 0

@@ -394,52 +394,49 @@ object Er {
                         cfg: ErConfig, bucketCap: Int = 256): DataFrame =
     attachBuckets(snapshot, batch, ingestBuckets(snapshot), cfg, bucketCap)
 
-  /** One row per snapshot (lang, 64-wide length bucket): its doc count
-    * `gsz`. The one aggregation behind both the ingest bucket cap and its
-    * dropped-mass lineage; skinny keys only, never content bytes. */
-  private[graft] def ingestBuckets(snapshot: DataFrame): DataFrame =
-    snapshot.groupBy(col("lang"), lenBucket(col("content")).as("bucket"))
+  /** One row per (lang, 64-wide length bucket) of `docs` (lang, content):
+    * its doc count `gsz`. The one aggregation behind both the ingest bucket
+    * cap and its dropped-mass lineage; skinny keys only, never content. */
+  private[graft] def ingestBuckets(docs: DataFrame): DataFrame =
+    docs.groupBy(col("lang"), lenBucket(col("content")).as("bucket"))
       .agg(count(lit(1)).as("gsz"))
 
   /** A doc's 64-wide length bucket, the ingest blocking key next to lang. */
   private def lenBucket(content: Column): Column = floor(length(content) / 64)
 
-  /** [[assignIncremental]] given the snapshot's [[ingestBuckets]] rows:
-    * buckets of at most `bucketCap` docs take part. Each candidate row
-    * carries the snapshot doc's entity as `id_b`, which [[score]] passes
-    * through untouched, so the per-doc answer is a groupBy of the scored
-    * rows with no join back to the snapshot (one snapshot row per
-    * candidate: every snapshot doc has a single home bucket). */
+  /** [[assignIncremental]] given the snapshot's [[ingestBuckets]] rows.
+    * The cap filters the snapshot: only docs of buckets with at most
+    * `bucketCap` docs meet the exploded batch, which the planner
+    * broadcasts while the snapshot streams (a batch too big to broadcast
+    * takes Spark's shuffled join), so over-cap buckets never cross an
+    * exchange. Candidates carry the snapshot doc's entity as `id_b`
+    * ([[score]] passes it through), so one aggregation over the batch ids
+    * and their matches answers every batch doc, with no join back.
+    * Batch ids must be unique: a repeated id gets one answer. */
   private[graft] def attachBuckets(snapshot: DataFrame, batch: DataFrame, buckets: DataFrame,
                                    cfg: ErConfig, bucketCap: Int): DataFrame = {
-    val sn = snapshot.select(col("lang"), col("content").as("content_s"), col("entity"),
-      lenBucket(col("content")).as("bucket"),
-      length(col("content")).as("len_s"))
-    // eligible snapshot buckets: tiny (lang, bucket) list, AQE-broadcast
-    val elig = buckets.where(col("gsz") <= bucketCap).select("lang", "bucket")
+    val home = lenBucket(col("content"))
+    val sn = snapshot.select(col("lang"), home.as("bucket"), col("content").as("content_s"),
+        length(col("content")).as("len_s"), col("entity"))
+      .join(buckets.where(col("gsz") <= bucketCap).select("lang", "bucket"), Seq("lang", "bucket"))
     // |len diff| <= tau spans at most ceil(tau/64) buckets either way
     val r = math.ceil(cfg.tau / 64.0).toInt
-    val home = lenBucket(col("content"))
     val bt = batch.select(col("id"), col("lang"), col("content"),
       length(col("content")).as("len"),
       explode(array((-r to r).map(home + _): _*)).as("bucket"))
-    val cand = bt.join(elig, Seq("lang", "bucket"))
-      .join(sn, Seq("lang", "bucket"))
+    val cand = bt.join(sn, Seq("lang", "bucket"))
       .where(abs(col("len") - col("len_s")) <= cfg.tau)
-    // the candidate join arrives AQE-coalesced to one partition (few
-    // bytes, much WFA work): widen it so scoring runs on every core
-    val scored = score(cand.select(col("id").as("id_a"), col("entity").as("id_b"),
+    // the candidates keep the snapshot scan's few partitions (few bytes,
+    // much WFA work): widen them so scoring runs on every core
+    val matches = score(cand.select(col("id").as("id_a"), col("entity").as("id_b"),
         col("content").cast("binary").as("bytes_a"),
         col("content_s").cast("binary").as("bytes_b"))
       .repartition(cand.sparkSession.sparkContext.defaultParallelism * 2), cfg)
-    val matches = scored
       .where(!col("saturated") && col("distance") <= cfg.tau)
-      .groupBy(col("id_a").as("id"))
-      .agg(min("id_b").as("matched_entity"), count(lit(1)).as("n_matches"))
-    batch.select("id").join(matches, Seq("id"), "left_outer")
-      .select(col("id"),
-        coalesce(col("matched_entity"), col("id")).as("entity"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"))
+    batch.select(col("id"), lit(null).as("m"))
+      .unionByName(matches.select(col("id_a").as("id"), col("id_b").as("m")))
+      .groupBy("id")
+      .agg(coalesce(min("m"), col("id")).as("entity"), count("m").as("n_matches"))
   }
 
   /** The ingest bucket cap as aggregate expressions over [[ingestBuckets]]

@@ -74,7 +74,7 @@ object ErRunner {
     * bucket-cap dropped-mass row ([[Er.incrementalDroppedStats]]'s
     * `ingest_dropped`, the observable recall cost of the hot-block
     * policy) is observed on the bucket-size aggregation the assignment
-    * runs anyway, so it takes no second pass over the snapshot.
+    * runs anyway, over `corpus` alone (sizes need only lang and length).
     *
     * @return the runner; `entities_merged` is the updated entity table
     *   (old entities ∪ batch assignments) for downstream readers. */
@@ -90,11 +90,11 @@ object ErRunner {
     val dropped = Observation("graft_ingest_dropped")
     val assigned = r.stage("assigned") {
       val rules = Er.ingestDroppedPolicy(bucketCap)
-      val buckets = Er.ingestBuckets(snapshot).observe(dropped, rules.head, rules.tail: _*)
+      val buckets = Er.ingestBuckets(corpus).observe(dropped, rules.head, rules.tail: _*)
       Er.attachBuckets(snapshot, batch, buckets, cfg, bucketCap)
     }
     if (r.computed.contains("assigned")) {
-      policyLineage(r, "ingest_dropped", dropped)(Er.incrementalDroppedStats(snapshot, bucketCap))
+      policyLineage(r, "ingest_dropped", dropped)(Er.incrementalDroppedStats(corpus, bucketCap))
     }
     r.stage("entities_merged")(
       entities.unionByName(assigned.select("id", "entity")))
