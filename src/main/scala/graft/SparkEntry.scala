@@ -6,7 +6,6 @@ import graft.ops.{AsOf, Cdc, Dedup, KMeans, Multimodal, Pq, RangeJoin, Sampling,
 import graft.pipeline.{Er, ErConfig, ErRunner}
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

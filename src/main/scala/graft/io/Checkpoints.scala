@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
-/** Checkpointed stage runner: every pipeline stage writes a partitioned
-  * Parquet table (Iceberg-shaped layout — a directory per table with an
+/** Checkpointed stage runner: every pipeline stage writes a Parquet
+  * table (Iceberg-shaped layout — a directory per table with an
   * atomic commit record; swap-in point for an Iceberg catalog when the
   * runtime jar is available, see SURVEY.md §7) and is read back, so a
   * killed run resumes at the last completed stage (BASELINE.json
@@ -68,13 +68,11 @@ final class StageRunner(spark: SparkSession, baseDir: String) {
     * runner was computed in this run: a later checkpoint may have been
     * built from that stage's old output, so it must not resume.
     *
-    * `partitionCols` Hive-partitions the checkpoint table (e.g. by lang),
-    * so a resumed run — or any downstream reader with a partition-column
-    * predicate — prunes directories instead of re-reading the whole stage
-    * table (round-2 verdict #1: at 100 TB a flat resume re-read is the
-    * cost of the stage itself). The row count for the lineage table rides
-    * the checkpoint write as an `observe()` metric — one job per stage,
-    * never a second count-the-table scan.
+    * `partitionCols` Hive-partitions the checkpoint table; only
+    * erbench's traced twin of [[graft.pipeline.ErRunner]] passes it, and
+    * every production stage is flat. The row count for the lineage table
+    * rides the checkpoint write as an `observe()` metric — one job per
+    * stage, never a second count-the-table scan.
     *
     * A computed stage drops its old commit record first, so a run that
     * dies before the write cannot leave the old table committed after an

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.Hashing
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines, over a

@@ -103,10 +103,9 @@ object Corpus {
       .flatMap(g => groupMembers(g, cfg))
   }
 
-  /** The canonical corpus table with derived invariant columns:
-    * sha256(content) (input_hint per-row invariant) and byte length. */
+  /** The canonical corpus table: `files` plus sha256(content), the
+    * input_hint per-row invariant. Lengths are not stored: every reader
+    * takes them from the content it reads anyway. */
   def withDerived(files: DataFrame): DataFrame =
-    files
-      .withColumn("sha256", sha2(col("content"), 256))
-      .withColumn("len", octet_length(col("content")))
+    files.withColumn("sha256", sha2(col("content"), 256))
 }

@@ -14,13 +14,13 @@ import scala.concurrent.duration.Duration
   * recomputation worth more than its write. Where a stage lives, when it
   * is complete (its commit record) and how it is read belong to
   * [[StageRunner]] alone; this object names stages and reads them only
-  * through it. `corpus` is Hive-partitioned by `lang` — blocking keys
-  * never cross languages, so a resumed (or lang-scoped) run prunes to the
-  * languages it touches. `pairs` is a flat table that computes the MinHash
-  * blocks inline (no blocks table: they are read once); the
-  * blocking-policy counts ride its write. `scored` holds every scored
-  * pair; `entities` clusters the match edges read from `scored` with the
-  * threshold filter pushed into the scan (no edges table). */
+  * through it. Every stage is a flat table: every reader scans all of
+  * it, so partitioning by `lang` would only sort each write and split it
+  * into more files. `pairs` computes the MinHash blocks inline (no blocks
+  * table: they are read once); the blocking-policy counts ride its write.
+  * `scored` holds every scored pair; `entities` clusters the match edges
+  * read from `scored` with the threshold filter pushed into the scan (no
+  * edges table). */
 object ErRunner {
 
   val Stages: Seq[String] = Seq("corpus", "pairs", "scored", "entities")
@@ -34,7 +34,7 @@ object ErRunner {
   def run(spark: SparkSession, workDir: String, cfg: ErConfig)
          (corpusSource: => DataFrame): StageRunner = {
     val r = new StageRunner(spark, workDir)
-    val corpus = r.stage("corpus", Seq("lang"))(Corpus.withDerived(corpusSource))
+    val corpus = r.stage("corpus")(Corpus.withDerived(corpusSource))
     // recall-policy observability: mass discarded by the mega-block drop,
     // observed on the per-block rows the pairs write aggregates anyway
     val policy = Observation("graft_blocking_policy")
@@ -86,7 +86,7 @@ object ErRunner {
     val entities = full.read("entities")
     val snapshot = corpus.select("id", "lang", "content").join(entities, "id")
     val r = new StageRunner(spark, s"$workDir/ingest/$tag")
-    val batch = r.stage("batch", Seq("lang"))(batchSource)
+    val batch = r.stage("batch")(batchSource)
     val dropped = Observation("graft_ingest_dropped")
     val assigned = r.stage("assigned") {
       val rules = Er.ingestDroppedPolicy(bucketCap)

@@ -37,7 +37,6 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestBase {
 
   test("er03 blocking drops a hot length bucket but keeps cold-bucket pairs") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // synthetic documents table: 300 same-lang docs of identical length
     // (one bucket, over the 256 cap) + 3 docs in a far-away length bucket.
     // erInput also plants a trimmed copy of every doc_id % 5 == 0 — keep

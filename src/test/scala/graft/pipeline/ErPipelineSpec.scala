@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.SparkTestBase
 import graft.core.{Hashing, Levenshtein}
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -365,25 +365,30 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     }
   }
 
+  /** The final plans of the file writes `body` runs, by the name of the
+    * directory each one writes. */
+  private def writePlans(body: => Any): Map[String, Seq[SparkPlan]] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobTasks returns once the listener bus has delivered every event
+    try jobTasks(body)
+    finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq.flatMap { p =>
+      collect(p) { case w: DataWritingCommandExec => w.cmd }
+        .collect { case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName -> p }
+    }.groupMap(_._1)(_._2)
+  }
+
   test("a crawl's assignment broadcasts the exploded batch and shuffles no snapshot content") {
     withWorkDir("er-attach-plan") { dir =>
       ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
       val batch = nearCopies(dir)
-      val plans = new ConcurrentLinkedQueue[SparkPlan]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      // jobTasks returns once the listener bus has delivered every event
-      try jobTasks(ErRunner.runIncremental(spark, dir, "crawl", cfg)(batch))
-      finally spark.listenerManager.unregister(listener)
-      val assigned = plans.asScala.filter(p => collect(p) {
-        case w: DataWritingCommandExec => w.cmd
-      }.exists {
-        case i: InsertIntoHadoopFsRelationCommand => i.outputPath.getName == "assigned"
-        case _ => false
-      })
+      val plans = writePlans(ErRunner.runIncremental(spark, dir, "crawl", cfg)(batch))
+      val assigned = plans.getOrElse("assigned", Nil)
       assert(assigned.size == 1, plans)
       val plan = assigned.head
       val batchSide = collect(plan) {
@@ -496,20 +501,39 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
     }
   }
 
-  test("checkpoint tables are partition-pruned: a lang-scoped read touches only its directory") {
-    withWorkDir("er-prune") { dir =>
-      ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
-      val all = spark.read.parquet(s"$dir/corpus")
-      val langs = all.select("lang").distinct().collect().map(_.getString(0))
-      assert(langs.length >= 2, "need multiple langs to demonstrate pruning")
-      val one = langs.head
-      val scanned = all.where(col("lang") === one)
-        .select(input_file_name()).distinct().collect().map(_.getString(0))
-      assert(scanned.nonEmpty && scanned.forall(_.contains(s"lang=$one")),
-        s"lang-filtered read must stay inside its partition dir: $scanned")
-      val totalFiles = all.select(input_file_name()).distinct().count()
-      assert(scanned.length < totalFiles,
-        s"pruned read ($one) must touch fewer files than the full table")
+  test("ErRunner writes corpus and a crawl's batch flat: no lang= directory, no sort in the write") {
+    withWorkDir("er-flat") { dir =>
+      val run = writePlans(ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF()))
+      val crawl = writePlans(ErRunner.runIncremental(spark, dir, "crawl", cfg)(nearCopies(dir)))
+      for ((stage, base, plans) <- Seq(("corpus", dir, run), ("batch", s"$dir/ingest/crawl", crawl))) {
+        val dirs = new java.io.File(s"$base/$stage").listFiles().filter(_.isDirectory).map(_.getName)
+        assert(!dirs.exists(_.startsWith("lang=")), s"$stage: ${dirs.mkString(", ")}")
+        val writes = plans.getOrElse(stage, Nil)
+        assert(writes.size == 1, plans)
+        assert(collect(writes.head) { case sort: SortExec => sort }.isEmpty, writes.head)
+      }
+    }
+  }
+
+  test("a work directory with a lang-partitioned corpus resumes and crawls as a flat one does") {
+    withWorkDir("er-old-layout") { dir =>
+      val source = Corpus.generate(spark, genCfg).toDF()
+      // the earlier layout: corpus Hive-partitioned by lang, with a byte-length column
+      new graft.io.StageRunner(spark, s"$dir/old").stage("corpus", Seq("lang"))(
+        Corpus.withDerived(source).withColumn("len", octet_length(col("content"))))
+      assert(new java.io.File(s"$dir/old/corpus").list().exists(_.startsWith("lang=")))
+      val first = ErRunner.run(spark, s"$dir/old", cfg)(sys.error("corpus must not be recomputed"))
+      assert(first.computed == Seq("pairs", "scored", "entities"))
+      val resumed = ErRunner.run(spark, s"$dir/old", cfg)(sys.error("corpus must not be recomputed"))
+      assert(resumed.computed.isEmpty)
+      ErRunner.run(spark, s"$dir/flat", cfg)(source)
+      def rows(path: String) = spark.read.parquet(path).collect().toSet
+      assert(rows(s"$dir/old/entities") == rows(s"$dir/flat/entities"))
+      val batch = nearCopies(s"$dir/flat")
+      for (layout <- Seq("old", "flat")) ErRunner.runIncremental(spark, s"$dir/$layout", "crawl", cfg)(batch)
+      val assigned = rows(s"$dir/flat/ingest/crawl/assigned")
+      assert(assigned.exists(_.getAs[Long]("n_matches") > 0L))
+      assert(rows(s"$dir/old/ingest/crawl/assigned") == assigned)
     }
   }
 
@@ -636,21 +660,23 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
   test("every stage reads back as written; lineage tables read back as Spark writes them") {
     withWorkDir("er-schema") { dir =>
       val source = Corpus.generate(spark, genCfg).toDF()
-      // ErRunner.run's and runIncremental's stages, through one runner each
+      // ErRunner.run's and runIncremental's stages, through one runner each,
+      // and `blocks` partitioned by lang as erbench's traced twin writes it
       val r = new graft.io.StageRunner(spark, s"$dir/run")
-      val corpus = r.stage("corpus", Seq("lang"))(Corpus.withDerived(source))
+      val corpus = r.stage("corpus")(Corpus.withDerived(source))
+      val blocks = r.stage("blocks", Seq("lang"))(Er.blocks(corpus, cfg))
       val pairs = r.stage("pairs")(Er.candidatePairs(Er.blocks(corpus, cfg), cfg))
       val scored = r.stage("scored")(Er.score(Er.withContents(pairs, corpus), cfg))
       val entities = r.stage("entities")(Er.entities(corpus, Er.connectedComponents(Er.edges(scored, cfg))))
       val i = new graft.io.StageRunner(spark, s"$dir/ingest")
-      val batch = i.stage("batch", Seq("lang"))(
+      val batch = i.stage("batch")(
         corpus.where(col("id") % 10 === 0).select((col("id") + 10000000L).as("id"), col("lang"), col("content")))
       val snapshot = corpus.select("id", "lang", "content").join(entities, "id")
       val assigned = i.stage("assigned")(Er.assignIncremental(snapshot, batch, cfg))
       val merged = i.stage("entities_merged")(entities.unionByName(assigned.select("id", "entity")))
-      val stages = Seq("run/corpus" -> corpus, "run/pairs" -> pairs, "run/scored" -> scored,
-        "run/entities" -> entities, "ingest/batch" -> batch, "ingest/assigned" -> assigned,
-        "ingest/entities_merged" -> merged)
+      val stages = Seq("run/corpus" -> corpus, "run/blocks" -> blocks, "run/pairs" -> pairs,
+        "run/scored" -> scored, "run/entities" -> entities, "ingest/batch" -> batch,
+        "ingest/assigned" -> assigned, "ingest/entities_merged" -> merged)
       // as Spark infers it from the files, and as a resumed runner reads it
       def resumed(name: String) = {
         val Array(base, stage) = name.split("/")
@@ -660,7 +686,7 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase
         assert(df.schema == stored.schema, name)
         assert(df.exceptAll(stored).isEmpty && stored.exceptAll(df).isEmpty, name)
       }
-      assert(corpus.columns.last == "lang" && batch.columns.last == "lang")
+      assert(blocks.columns.last == "lang")
 
       // lineage: each stage's row, and tables of the types Spark would write
       def sparkWritten(name: String, df: DataFrame): StructType = {

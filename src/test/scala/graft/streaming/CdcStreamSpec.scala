@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.ops.Cdc
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
